@@ -718,183 +718,83 @@ object Hnsw {
     path
   }
 
-  /** Read a stored index into an RDD with EXACTLY one partition per shard
-    * (partition i = shard i) and NO exchange (optimization round 15, guide
-    * §6/§2.4 — VERDICT r14 #1): the write already laid the index out one
-    * directory per shard (`partitionBy("shard")`), so the load maps each
-    * shard's own files straight into its build task. The previous load
-    * re-shuffled the FULL index (vectors + adjacency — the fattest rows in
-    * the repo) through a `partitionBy(HashPartitioner)` exchange on every
-    * search: q183 measured 1.57 s at 32 cores vs 0.50 s at 8 (pure
-    * exchange/task churn on an already-laid-out table). Each per-shard
-    * directory reads under an explicit schema (no footer inference); a
-    * missing shard directory becomes an empty partition so partition
-    * index == shard stays true for zip-style consumers (q174's insert
-    * pass); any layout that breaks the one-split-per-shard assumption
-    * falls back to the exchange-based load below.
+  /** A stored index loaded one shard per partition, with the partition
+    * index each stored shard landed in.
     */
-  /** [[IndexRow]] minus the shard column — the physical row of one
-    * `shard=N` directory (shard is the partition directory, not a data
-    * column); the shard comes back from the partition INDEX.
-    */
-  // private[graft], not private: the encoder's generated SafeProjection
-  // constructs this class from OUTSIDE the object, and Scala `private`
-  // is bytecode-private (codegen failed with "Private member cannot be
-  // accessed"); package-qualified private compiles to a public member.
-  private[graft] final case class StoredRow(vec_id: Long, level: Int,
-      is_entry: Boolean, embedding: Array[Float], adj: Array[Array[Long]])
+  private[graft] final case class StoredIndex(
+      rdd: org.apache.spark.rdd.RDD[IndexRow], partOf: Map[Int, Int])
 
-  private def storedShardRdd(s: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[IndexRow] = {
-    import s.implicits._
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val found = fs.listStatus(hp).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("shard="))
-      .map(_.stripPrefix("shard=").toInt)
-      .toSet
-    // ensureIndex rebuilds any index whose fingerprint mismatches, so the
-    // layout is always this code's own IsoShards write; a foreign layout
-    // must fail loudly, not load misaligned
-    require(found.forall(sh => sh >= 0 && sh < IsoShards),
-      s"stored index at $path has shard dirs outside 0..${IsoShards - 1}")
-    val sub = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.Encoders.product[StoredRow].schema)
-    // ONE query plan: per-shard-directory scans unioned in shard order (a
-    // missing shard pads with an empty 1-partition relation) — partition
-    // i == shard i with zero exchanges. Two measured dead ends recorded
-    // here so they are not re-tried: (a) one Dataset read PER directory =
-    // 16 QueryExecutions + 16 codegen'd deserializers serially on the
-    // driver, an ~0.8 s gap in the job timeline — slower than the
-    // exchange it replaced; (b) coalesce(1) per child = every child
-    // claims SinglePartition, and Spark 4's UnionExec ZIPS children with
-    // identical output partitioning into one task, serializing all 16
-    // graph loads. Bare scans report UnknownPartitioning, so the union
-    // concatenates.
-    val parts: Seq[DataFrame] = (0 until IsoShards).map { sh =>
-      if (found.contains(sh))
-        s.read.schema(sub).parquet(s"$path/shard=$sh")
-      else s.createDataFrame(
-        s.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1), sub)
+  /** Routes shard keys to the partition [[StoredIndex.partOf]] gave them. */
+  private final class ShardPartitioner(partOf: Map[Int, Int])
+      extends org.apache.spark.Partitioner {
+    def numPartitions: Int = partOf.size
+    def getPartition(key: Any): Int = partOf(key.asInstanceOf[Int])
+  }
+
+  /** The one stored-index load. The write laid the index out one
+    * `shard=N` directory per shard, so a single scan of the index root
+    * that maps each file whole into its own task IS one partition per
+    * shard — no exchange (exchanging the index re-shuffles vectors +
+    * adjacency on every search: measured q183 1.57 s at 32 cores vs
+    * 0.50 s at 8). `FilePartition.maxSplitBytes` reads the open cost only
+    * from the session SQLConf (a per-read option is ignored), so the scan
+    * is planned on a child session — same SparkContext, own conf — whose
+    * 1 GiB open cost closes a partition after every file; the caller's
+    * conf is never touched. Each partition's shard comes from its file
+    * list at planning time, and the layout is checked per partition: one
+    * shard per partition and one partition per shard. A split or stray
+    * file breaks that, and only then is the index exchanged on the stored
+    * shard value — correct under any layout.
+    */
+  private[graft] def loadStored(s: SparkSession, path: String): StoredIndex = {
+    // Measured dead ends: one Dataset read per shard directory cost ~0.8 s
+    // of driver gap; coalesce(1) children get zipped into one task by UnionExec.
+    val child = s.newSession()
+    child.conf.set("spark.sql.files.openCostInBytes", (1L << 30).toString)
+    import child.implicits._
+    val rdd = child.read
+      .schema(org.apache.spark.sql.Encoders.product[IndexRow].schema)
+      .parquet(path).as[IndexRow].rdd
+    val scan = fileScanOf(rdd).getOrElse(throw new IllegalStateException(
+      s"stored index at $path did not plan as a file scan"))
+    val shardsAt = scan.filePartitions.map { p =>
+      p.index -> p.files.map { f =>
+        require(f.partitionValues.numFields == 1,
+          s"stored index at $path is not laid out one directory per shard")
+        f.partitionValues.getInt(0)
+      }.distinct.toSeq
     }
-    val fast = parts.reduce(_ union _).as[StoredRow].rdd
-    val rdd =
-      if (fast.getNumPartitions == IsoShards)
-        fast.mapPartitionsWithIndex((sh, it) => it.map(r =>
-          IndexRow(sh, r.vec_id, r.level, r.is_entry, r.embedding, r.adj)))
-      else
-        // a shard directory planned into ≠1 scan splits (a file above
-        // maxPartitionBytes, or stray extra files): the positional
-        // alignment is gone, so pay the exchange-based load — correct
-        // under any layout. Never taken for this writer's own output at
-        // bench scale; at production scale raise maxPartitionBytes or
-        // accept the shuffle.
-        shardExchangeLoad(s, path)
-    shardRddCache.put(censusOf(s, path), rdd)
-    rdd
+    val narrow = shardsAt.collect { case (i, Seq(sh)) => sh -> i }.toMap
+    if (narrow.size == shardsAt.size) StoredIndex(rdd, narrow)
+    else {
+      val partOf = shardsAt.flatMap(_._2).distinct.sorted.zipWithIndex.toMap
+      StoredIndex(rdd.map(r => (r.shard, r))
+        .partitionBy(new ShardPartitioner(partOf)).values, partOf)
+    }
   }
 
-  /** The always-correct load: one scan of the whole index, exchanged on
-    * the stored shard value — partition i = shard i at any file layout,
-    * at the cost of shuffling the full index.
-    */
-  private def shardExchangeLoad(s: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[IndexRow] = {
-    import s.implicits._
-    s.read.parquet(path).as[IndexRow].rdd
-      .map(r => (r.shard, r))
-      .partitionBy(new org.apache.spark.HashPartitioner(IsoShards))
-      .values
-  }
-
-  /** Per-JVM memo of planned index-load RDDs, keyed by the directory's
-    * exact file census (path, size, mtime of every file under it). This
-    * caches the PLAN/lineage only — every action over the RDD still reads
-    * the parquet bytes in its tasks — and a rewritten index (new part-file
-    * names/mtimes) can never hit a stale entry. Why it exists: Catalyst
-    * analysis + codegen of the 16-branch union costs ~0.4–0.7 s of driver
-    * time PER CONSTRUCTION (measured), which a repeated-search workload
-    * would otherwise pay on every query; same stance as Spark's own
-    * file-index cache and the bench's codegen warm-up — construction cost
-    * amortizes, compute does not.
-    */
-  private val shardRddCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.rdd.RDD[IndexRow]]()
-
-  private def censusOf(s: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val b = new StringBuilder(path)
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else b.append('|').append(st.getPath.getName)
-          .append(':').append(st.getLen)
-          .append('@').append(st.getModificationTime)
+  /** The file scan at the root of a narrow lineage, if there is one. */
+  @scala.annotation.tailrec
+  private def fileScanOf(r: org.apache.spark.rdd.RDD[_])
+      : Option[org.apache.spark.sql.execution.datasources.FileScanRDD] =
+    r match {
+      case f: org.apache.spark.sql.execution.datasources.FileScanRDD => Some(f)
+      case _ => r.dependencies match {
+        case Seq(d: org.apache.spark.OneToOneDependency[_]) => fileScanOf(d.rdd)
+        case _ => None
       }
-    walk(hp)
-    b.toString
-  }
+    }
 
-  private def storedShardRddCached(s: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[IndexRow] = {
-    val key = censusOf(s, path)
-    val hit = shardRddCache.get(key)
-    if (hit != null) hit else storedShardRdd(s, path)
-  }
-
-  /** Whole-shard narrow load WITHOUT positional alignment — the cheap
-    * form for consumers that read the shard off the rows instead of the
-    * partition index: ONE single-relation scan of the index root (the
-    * 16-branch union above costs ~0.5 s of driver-side analysis/codegen
-    * per construction; this plans in tens of ms), forced to
-    * one-file-per-partition by a temporary `openCostInBytes` override so
-    * each task holds exactly one shard's file and no exchange runs. When
-    * the one-file-per-shard layout doesn't hold (split/stray files), fall
-    * back to the exchange load.
-    */
-  private def storedShardsNarrow(s: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[IndexRow] = {
-    import s.implicits._
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nShards =
-      fs.listStatus(hp).count(_.getPath.getName.startsWith("shard="))
-    val OpenCost = "spark.sql.files.openCostInBytes"
-    val prev = scala.util.Try(s.conf.get(OpenCost)).toOption
-    val rdd =
-      try {
-        // an effective 1 GiB open cost means any two files exceed the
-        // split budget: exactly one file per partition. The conf is read
-        // when the scan's partitions are planned — forced here by
-        // getNumPartitions — then restored.
-        s.conf.set(OpenCost, (1L << 30).toString)
-        val r = s.read
-          .schema(org.apache.spark.sql.Encoders.product[IndexRow].schema)
-          .parquet(path).as[IndexRow].rdd
-        r.getNumPartitions
-        r
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(OpenCost, v)
-          case None => s.conf.unset(OpenCost)
-        }
-      }
-    if (rdd.getNumPartitions == nShards) rdd else shardExchangeLoad(s, path)
-  }
-
-  /** Load stored shard graphs and search them — NO build and NO shuffle:
-    * the only inputs are the per-shard index parquet files (each mapped
-    * whole into one task by [[storedShardsNarrow]]) and the broadcast
-    * probes. The shard id comes off the rows, so this path needs no
-    * positional partition↔shard contract.
+  /** Load stored shard graphs and search them — NO build and NO shuffle
+    * on the narrow layout: the only inputs are the per-shard index files
+    * (each mapped whole into one task by [[loadStored]]) and the broadcast
+    * probes. The shard id comes off the rows.
     */
   private def storedHits(s: SparkSession, d: String,
       path: String): org.apache.spark.sql.Dataset[Hit] = {
     import s.implicits._
     val bq = probeVecs(s, d)
-    val rdd = storedShardsNarrow(s, path).mapPartitions { it =>
+    val rdd = loadStored(s, path).rdd.mapPartitions { it =>
       val rs = it.toIndexedSeq
       if (rs.isEmpty) Iterator.empty
       else {
@@ -906,6 +806,45 @@ object Hnsw {
       }
     }
     s.createDataset(rdd)
+  }
+
+  /** Insert `fresh` into the graphs stored at `basePath` (old nodes are
+    * never re-indexed) and return the updated index rows, one shard per
+    * partition. The stored side arrives from [[loadStored]]; only the
+    * fresh batch is shuffled, by a partitioner that sends each shard to
+    * the partition its stored graph loaded into, and the two sides are
+    * zipped. A shard with fresh rows but no stored graph gets an empty
+    * stored partition of its own.
+    */
+  private[graft] def appendBatch(s: SparkSession, basePath: String,
+      fresh: org.apache.spark.sql.Dataset[VecRow])
+      : org.apache.spark.sql.Dataset[IndexRow] = {
+    import s.implicits._
+    val stored = loadStored(s, basePath)
+    val n = stored.rdd.getNumPartitions
+    val missing = (0 until IsoShards).filterNot(stored.partOf.contains)
+    val partOf = stored.partOf ++ missing.zipWithIndex.map {
+      case (sh, j) => sh -> (n + j) }
+    val storedRdd =
+      if (missing.isEmpty) stored.rdd
+      else stored.rdd.union(
+        s.sparkContext.parallelize(Seq.empty[IndexRow], missing.size))
+    val freshRdd = fresh.rdd
+      .map(r => ((r.vec_id % IsoShards).toInt, r))
+      .partitionBy(new ShardPartitioner(partOf))
+    s.createDataset(storedRdd.zipPartitions(freshRdd) { (storedIt, batchIt) =>
+      val storedRows = storedIt.toIndexedSeq
+      val batch = batchIt.map(_._2).toIndexedSeq.sortBy(_.vec_id)
+      if (storedRows.isEmpty && batch.isEmpty) Iterator.empty
+      else {
+        val shard = storedRows.headOption.map(_.shard)
+          .getOrElse((batch.head.vec_id % IsoShards).toInt)
+        val g = new ShardGraph
+        g.loadFrom(storedRows)
+        batch.foreach(r => g.insert(r.vec_id, r.embedding))
+        g.toIndexRows(shard)
+      }
+    })
   }
 
   /** Drop a stored index variant — directory AND its per-JVM freshness
@@ -1012,37 +951,12 @@ object Hnsw {
   val q174HnswIncremental = Q(
     "q174_hnsw_incremental",
     (s, d) => {
-      import s.implicits._
       val basePath = ensureIndex(s, d, "base",
         vecRows(s, d).filter(col("vec_id") % 10 =!= 0))
-      // load stored base graphs, insert the new batch, write back. The
-      // stored side arrives ONE PARTITION PER SHARD straight from its
-      // per-shard parquet directories ([[storedShardRdd]] — no exchange);
-      // only the NEW batch (1/10 of the corpus, bare vectors) is shuffled,
-      // by the identity shard partitioner, and zipPartitions stitches the
-      // two by position (partition i == shard i on both sides). The
-      // previous shape cogrouped BOTH sides, re-shuffling the full stored
-      // index (vectors + adjacency) on every run (VERDICT r14 #1).
-      val fresh = vecRows(s, d).filter(col("vec_id") % 10 === 0)
-      val part = new org.apache.spark.HashPartitioner(IsoShards)
-      val freshRdd = fresh.rdd
-        .map(r => ((r.vec_id % IsoShards).toInt, r))
-        .partitionBy(part)
-      val updatedRdd = storedShardRddCached(s, basePath)
-        .zipPartitions(freshRdd) { (stored, batchIt) =>
-          val storedRows = stored.toIndexedSeq
-          val batch = batchIt.map(_._2).toIndexedSeq.sortBy(_.vec_id)
-          if (storedRows.isEmpty && batch.isEmpty) Iterator.empty
-          else {
-            val shard = storedRows.headOption.map(_.shard)
-              .getOrElse((batch.head.vec_id % IsoShards).toInt)
-            val g = new ShardGraph
-            g.loadFrom(storedRows)
-            batch.foreach(r => g.insert(r.vec_id, r.embedding))
-            g.toIndexRows(shard)
-          }
-        }
-      val updated = s.createDataset(updatedRdd)
+      // only the NEW batch (1/10 of the corpus, bare vectors) is shuffled;
+      // the stored graphs load without an exchange (VERDICT r14 #1)
+      val updated = appendBatch(s, basePath,
+        vecRows(s, d).filter(col("vec_id") % 10 === 0))
       val fullPath = indexPath(s, d, "incr")
       // the zip is already one shard per task, so partitionBy(shard)
       // writes one file per shard without a second full-index shuffle

@@ -96,6 +96,9 @@ class HnswSpec extends SparkSpec {
     rows.map(r => (r.shard, r.vec_id, r.level, r.is_entry,
       r.embedding.toSeq, r.adj.map(_.toSeq).toSeq)).toSeq.sortBy(_._2)
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
   test("index dump/load round-trip is idempotent: dump∘load∘dump = dump") {
     val vecs = randVecs(31, 500)
     val (g, _) = Hnsw.buildShard(vecs.iterator)
@@ -138,8 +141,6 @@ class HnswSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("hnswidx").toString
     spark.conf.set(Hnsw.IndexDirConf, tmp)
     try {
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
       val stored = rows(Hnsw.q183HnswSearchStored.plan(spark, dir))
       val fresh = rows(Hnsw.q173HnswQuery.plan(spark, dir))
       assert(stored == fresh)
@@ -155,6 +156,112 @@ class HnswSpec extends SparkSpec {
       Hnsw.q183HnswSearchStored.plan(spark, dir).write
         .format("noop").mode("overwrite").save()
       assert(mtimes == before, "re-ensure rewrote a fresh index")
+    } finally spark.conf.unset(Hnsw.IndexDirConf)
+  }
+
+  // ---- the stored-index loader and the q174 append over it ----
+
+  private def tempDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Write shard graphs over `base` as an index laid out like the engine's
+    * partitionBy("shard") write, except that shard `split` is written as
+    * two files and shard `empty`'s directory holds no data file.
+    */
+  private def handIndex(root: String, base: Seq[Hnsw.VecRow],
+      split: Option[Int], empty: Option[Int]): Unit = {
+    import spark.implicits._
+    (0 until Hnsw.IsoShards).foreach { sh =>
+      val dir = s"$root/shard=$sh"
+      if (empty.contains(sh)) new java.io.File(dir).mkdirs()
+      else {
+        val (g, _) = Hnsw.buildShard(
+          base.filter(_.vec_id % Hnsw.IsoShards == sh).iterator)
+        val df = spark.createDataset(g.toIndexRows(sh).toSeq).drop("shard")
+        (if (split.contains(sh)) df.repartition(2) else df.coalesce(1))
+          .write.mode("overwrite").parquet(dir)
+      }
+    }
+  }
+
+  /** (partition, shard, vec_id) of every row the loader returns. */
+  private def placed(st: Hnsw.StoredIndex) =
+    st.rdd.mapPartitionsWithIndex((i, it) =>
+      it.map(r => (i, r.shard, r.vec_id))).collect().toSeq
+
+  test("stored-index loader: one-file-per-shard layout loads narrow, conf untouched") {
+    val root = tempDir("hnswnarrow")
+    val vecs = randVecs(43, 400)
+    handIndex(root, vecs, split = None, empty = None)
+    val openCost = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(openCost)
+    val st = Hnsw.loadStored(spark, root)
+    assert(spark.conf.getOption(openCost) == before)
+    assert(st.rdd.getNumPartitions == Hnsw.IsoShards)
+    assert(st.rdd.dependencies.forall(
+      _.isInstanceOf[org.apache.spark.NarrowDependency[_]]))
+    assert(st.partOf.keySet == (0 until Hnsw.IsoShards).toSet)
+    val got = placed(st)
+    got.foreach { case (i, sh, id) =>
+      assert(sh == id % Hnsw.IsoShards && st.partOf(sh) == i, s"vec $id")
+    }
+    assert(got.map(_._3).sorted == vecs.map(_.vec_id))
+  }
+
+  test("stored-index loader + append: split file and empty shard dir keep shard ids") {
+    // one shard directory planned into two splits while another holds no
+    // data: the total partition count still equals the shard count, so a
+    // positional (partition i == shard i) stamping would mislabel rows
+    val root = tempDir("hnswsplit")
+    val vecs = randVecs(47, 800)
+    val (base, batch) = vecs.partition(_.vec_id % 10 != 0)
+    val (split, empty) = (3, 9)
+    handIndex(root, base, Some(split), Some(empty))
+    val st = Hnsw.loadStored(spark, root)
+    val got = placed(st)
+    got.foreach { case (i, sh, id) =>
+      assert(sh == id % Hnsw.IsoShards, s"vec $id loaded with shard $sh")
+      assert(st.partOf(sh) == i, s"shard $sh outside its partition")
+    }
+    assert(got.groupBy(_._1).values.forall(_.map(_._2).distinct.size == 1))
+    assert(got.map(_._3).sorted ==
+      base.filter(_.vec_id % Hnsw.IsoShards != empty).map(_.vec_id))
+    // append the batch: equal to building each shard from its stored rows
+    // then inserting its batch rows — the empty shard from its batch alone
+    import spark.implicits._
+    val appended = Hnsw.appendBatch(spark, root, spark.createDataset(batch))
+      .collect()
+    val expected = (0 until Hnsw.IsoShards).flatMap { sh =>
+      def of(vs: Seq[Hnsw.VecRow]) =
+        vs.filter(_.vec_id % Hnsw.IsoShards == sh).sortBy(_.vec_id)
+      val g = new Hnsw.ShardGraph
+      (if (sh == empty) Nil else of(base)).foreach(v => g.insert(v.vec_id, v.embedding))
+      of(batch).foreach(v => g.insert(v.vec_id, v.embedding))
+      g.toIndexRows(sh)
+    }
+    assert(canon(appended.iterator) == canon(expected.iterator))
+  }
+
+  test("q183 and q174 on a second session match the session that wrote the index") {
+    val tmp = tempDir("hnswsess")
+    spark.conf.set(Hnsw.IndexDirConf, tmp)
+    val other = spark.newSession()
+    other.conf.set(Hnsw.IndexDirConf, tmp)
+    try {
+      val q183 = rows(Hnsw.q183HnswSearchStored.plan(spark, dir))
+      val q174 = rows(Hnsw.q174HnswIncremental.plan(spark, dir))
+      assert(rows(Hnsw.q183HnswSearchStored.plan(other, dir)) == q183)
+      assert(rows(Hnsw.q174HnswIncremental.plan(other, dir)) == q174)
+    } finally spark.conf.unset(Hnsw.IndexDirConf)
+  }
+
+  test("q174 cold (no stored base index) and warm give identical rows") {
+    val tmp = tempDir("hnswcold")
+    spark.conf.set(Hnsw.IndexDirConf, tmp)
+    try {
+      val cold = rows(Hnsw.q174HnswIncremental.plan(spark, dir))
+      assert(new java.io.File(tmp).list().exists(_.startsWith("base_")))
+      assert(rows(Hnsw.q174HnswIncremental.plan(spark, dir)) == cold)
     } finally spark.conf.unset(Hnsw.IndexDirConf)
   }
 
