@@ -181,6 +181,13 @@ object MiniJson {
   * entrypoints the catalog queries use → preview/collect at the API edge
   * (mirroring the reference, which fetchall()s every endpoint) → render
   * JSON. The LLM and embedding ports default to the deterministic fakes.
+  *
+  * The sales, documents and embeddings inputs (and the daily sales series
+  * over a resident sales) are held resident in memory as one declared
+  * partition when Spark already plans their scan as one split, so each
+  * request plan over them runs as a single job with no shuffle; an input
+  * that scans as several splits keeps its plain plan.
+  * Every request runs under its own Spark job group, `http-<seq>`.
   */
 final class HttpFacade(
     spark: SparkSession,
@@ -191,11 +198,30 @@ final class HttpFacade(
 
   import MiniJson.{arr, obj, Raw}
 
-  private lazy val sales: DataFrame = SalesView(spark, sfDir)
+  // the frames this facade persisted, released by stop()
+  private val residents =
+    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+  private lazy val sales: DataFrame = resident(SalesView(spark, sfDir))
   private lazy val domains: Map[String, Seq[String]] =
     IntentParser.discoverDomains(sales)
-  private lazy val documents: DataFrame = Tables.documents(spark, sfDir)
-  private lazy val embeddings: DataFrame = Tables.embeddings(spark, sfDir)
+  private lazy val documents: DataFrame = resident(Tables.documents(spark, sfDir))
+  private lazy val embeddings: DataFrame = resident(Tables.embeddings(spark, sfDir))
+
+  /** `df` cached as one declared partition when Spark plans its scan as one
+    * split (`getNumPartitions` on a scan runs no job). The cached plan then
+    * reports `SinglePartition`, so no aggregate, window, sort or join built
+    * on it needs an Exchange: each request runs as one job. A scan of
+    * several splits keeps its plan, uncached.
+    */
+  private def resident(df: DataFrame): DataFrame =
+    if (df.rdd.getNumPartitions != 1) df
+    else {
+      val one = df.coalesce(1).persist()
+      one.count() // materialize once, inside the warm-up
+      residents.add(one)
+      one
+    }
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -207,7 +233,15 @@ final class HttpFacade(
   def start(): HttpFacade = { routes(); server.start(); this }
   // shut the pool down too: its threads are non-daemon, so a standalone
   // program that stops the facade would otherwise never exit
-  def stop(): Unit = { server.stop(0); pool.shutdown() }
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    // plan-equal frames share one cache entry across facades and sessions:
+    // another facade's requests then plan over the scan again, still as
+    // one partition
+    residents.forEach(_.unpersist())
+    residents.clear()
+  }
 
   // ---- plumbing ----------------------------------------------------------
 
@@ -223,10 +257,21 @@ final class HttpFacade(
   // iterates app.routes the same way)
   private val registered = scala.collection.mutable.ArrayBuffer.empty[String]
 
+  private val requestSeq = new java.util.concurrent.atomic.AtomicLong()
+
   private def handle(path: String)(f: HttpExchange => (Int, Raw)): Unit = {
     registered += path
     server.createContext(path, new HttpHandler {
       def handle(ex: HttpExchange): Unit = {
+        // ties every Spark job of this request to it; cleared because the
+        // pool threads serve the next request
+        val sc = spark.sparkContext
+        sc.setJobGroup(s"http-${requestSeq.incrementAndGet()}",
+          s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
+        try serve(ex)
+        finally sc.clearJobGroup()
+      }
+      private def serve(ex: HttpExchange): Unit = {
         val (status, body) =
           // com.sun.net.httpserver dispatches by longest raw PREFIX, so
           // /healthz or /analytics/kpi2 would land on the /health or
@@ -285,10 +330,16 @@ final class HttpFacade(
 
   // ---- endpoint plans ----------------------------------------------------
 
-  /** `/ts/sales-daily` + forecast history (`api/main.py:843-860,917-925`). */
-  private def daily: DataFrame =
-    sales.groupBy(col("date").as("d"))
+  /** `/ts/sales-daily` + forecast history (`api/main.py:843-860,917-925`).
+    * Resident exactly when `sales` is: over one partition it has no
+    * Exchange, so it is one partition too. Over a wider `sales` it keeps
+    * its plan (its partition count would need the shuffle to run).
+    */
+  private lazy val daily: DataFrame = {
+    val d = sales.groupBy(col("date").as("d"))
       .agg(Num.dsum(col("sales")).as("v"))
+    if (residents.contains(sales)) resident(d) else d
+  }
 
   /** `/bi/region-trends` generalized to a caller-supplied region list
     * (`api/main.py:743-767`; q53 is the fixed North/South catalog form).
@@ -328,9 +379,10 @@ final class HttpFacade(
         "sample_rows" -> rowsJson(sample))
     }
 
-    // `api/main.py:665-688` — the q50 plan: top-1s are broadcast joins
+    // `api/main.py:665-688` — the q50 plan over the facade's sales: top-1s
+    // are broadcast joins
     handle("/analytics/kpi") { _ =>
-      val row = graft.operators.Kpi.q50Kpi.plan(spark, sfDir).collect().head
+      val row = graft.operators.Kpi.kpi(sales).collect().head
       200 -> obj(
         "total_sales" -> row.getAs[Any]("total_sales"),
         "avg_satisfaction" -> row.getAs[Any]("avg_satisfaction"),
@@ -415,12 +467,11 @@ final class HttpFacade(
       range422("h", h, 1, 365)
         .orElse(range422("window", window, 1, 60))
         .getOrElse {
-          val d = daily
-          Forecasters.requirePoints(d, algo) // 400 on too-short history
+          Forecasters.requirePoints(daily, algo) // 400 on too-short history
           val fc = algo match {
-            case "seasonal7" => Forecasters.seasonal7(d, h)
-            case "drift" => Forecasters.drift(d, h, window)
-            case _ => Forecasters.ma7Baseline(d, h, window)
+            case "seasonal7" => Forecasters.seasonal7(daily, h)
+            case "drift" => Forecasters.drift(daily, h, window)
+            case _ => Forecasters.ma7Baseline(daily, h, window)
           }
           val hist = tableOf(
             daily.select(col("d").as("date"), col("v").as("sales"))

@@ -47,10 +47,12 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   /** `events.parquet` stores `ts` as parquet TIMESTAMP(NANOS), which Spark 4
-    * rejects by default (PARQUET_TYPE_ILLEGAL). We opt into the legacy
-    * nanos-as-long read and rebuild a proper TimestampType column via exact
-    * integer division (`DIV 1000`, never `/` — double division loses
-    * precision above 2^53, and epoch-nanos is ~1.7e18).
+    * rejects by default (PARQUET_TYPE_ILLEGAL). The session must opt into
+    * the legacy nanos-as-long read (every session builder sets it; this
+    * loader checks it and never changes a running session's conf). We
+    * rebuild a proper TimestampType column via exact integer division
+    * (`DIV 1000`, never `/` — double division loses precision above 2^53,
+    * and epoch-nanos is ~1.7e18).
     *
     * Files written by OTHER engines (DuckDB, older writers) carry
     * TIMESTAMP(MICROS) without timezone, which Spark reads as
@@ -60,7 +62,8 @@ object Tables {
     * events consumer sees one type regardless of who wrote the file.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false").toBoolean,
+      "events.parquet needs spark.sql.legacy.parquet.nanosAsLong=true in the session conf")
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.{Num, Q, Tables}
 import graft.intent.SalesView
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixed KPI/dashboard query surface — SURVEY §2.L: the endpoints every
@@ -13,27 +14,31 @@ object Kpi {
   private val davgSat =
     "CAST(SUM(CAST(satisfaction AS DECIMAL(18,2))) AS DOUBLE)/count(satisfaction)"
 
-  /** L1 — `/analytics/kpi` (`api/main.py:665-688`): total sales, avg
-    * satisfaction, top region, top product in one row. The top-1 lookups
-    * are broadcast 1-row joins, not collected scalars.
+  /** The `/analytics/kpi` row over any frame with the sales view's columns:
+    * total sales, avg satisfaction, top region, top product. The top-1
+    * lookups are broadcast 1-row joins, not collected scalars.
+    */
+  def kpi(sv: DataFrame): DataFrame = {
+    val totals = sv.agg(
+      Num.dsum(col("sales")).as("total_sales"),
+      Num.davg(col("satisfaction")).as("avg_satisfaction"))
+    val topRegion = sv.groupBy("region")
+      .agg(Num.dsum(col("sales")).as("v"))
+      .orderBy(col("v").desc, col("region")).limit(1)
+      .select(col("region").as("top_region"))
+    val topProduct = sv.groupBy("product")
+      .agg(Num.dsum(col("sales")).as("v"))
+      .orderBy(col("v").desc, col("product")).limit(1)
+      .select(col("product").as("top_product"))
+    totals.crossJoin(broadcast(topRegion)).crossJoin(broadcast(topProduct))
+  }
+
+  /** L1 — `/analytics/kpi` (`api/main.py:665-688`): [[kpi]] over the
+    * sales view read from parquet.
     */
   val q50Kpi = Q(
     "q50_kpi",
-    (s, d) => {
-      val sv = SalesView(s, d)
-      val totals = sv.agg(
-        Num.dsum(col("sales")).as("total_sales"),
-        Num.davg(col("satisfaction")).as("avg_satisfaction"))
-      val topRegion = sv.groupBy("region")
-        .agg(Num.dsum(col("sales")).as("v"))
-        .orderBy(col("v").desc, col("region")).limit(1)
-        .select(col("region").as("top_region"))
-      val topProduct = sv.groupBy("product")
-        .agg(Num.dsum(col("sales")).as("v"))
-        .orderBy(col("v").desc, col("product")).limit(1)
-        .select(col("product").as("top_product"))
-      totals.crossJoin(broadcast(topRegion)).crossJoin(broadcast(topProduct))
-    },
+    (s, d) => kpi(SalesView(s, d)),
     Some(s"""
       WITH ${SalesView.sqlCte},
       tr AS (SELECT region FROM (

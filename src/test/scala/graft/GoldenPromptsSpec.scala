@@ -24,8 +24,48 @@ class GoldenPromptsSpec extends SparkSpec {
       .map("%02x".format(_)).mkString.take(12)
   }
 
-  // (prompt, stage, name, rows, digest, columns)
-  private val dataGolden: Seq[(String, String, String, Int, String, String)] = Seq(
+  // (prompt, reason-prefix) — doc-routed prompts never reach the data engine
+  private val docGolden: Seq[(String, String)] = Seq(
+    ("What are some of the domains that are accepting of time series analysis and predictions?",
+      "routed to docs: No strong"),
+    ("Summarize the key ideas from the Walmart PDF",
+      "routed to docs: Explicit doc"),
+    ("How can AI be a core component of value creation in a business model?",
+      "routed to docs: No strong"),
+    ("What does business intelligence refer to and what are it's ultimate goals?",
+      "routed to docs: No strong"),
+  )
+
+  test("all 22 data prompts: stage, plan, shape, and result digest are stable") {
+    GoldenPromptsSpec.dataGolden.foreach { case (prompt, stage, name, nRows, dig, cols) =>
+      AskAi.answerWithDiscovery(spark, prompt, sales) match {
+        case Right(a) =>
+          assert(a.stage === stage, s"stage drift for: $prompt")
+          assert(a.name === name, s"plan drift for: $prompt")
+          assert(a.table.columns.mkString(",") === cols, s"schema drift for: $prompt")
+          val rows = a.table.collect()
+          assert(rows.length === nRows, s"row-count drift for: $prompt")
+          assert(digest(rows) === dig, s"result drift for: $prompt")
+        case Left(r) => fail(s"unexpected docs route for: $prompt ($r)")
+      }
+    }
+  }
+
+  test("all 4 doc prompts stay off the data engine with the reference reason") {
+    docGolden.foreach { case (prompt, prefix) =>
+      AskAi.answerWithDiscovery(spark, prompt, sales) match {
+        case Left(reason) => assert(reason.startsWith(prefix), s"$prompt → $reason")
+        case Right(a)     => fail(s"unexpected data answer (${a.stage}) for: $prompt")
+      }
+    }
+  }
+}
+
+object GoldenPromptsSpec {
+
+  // (prompt, stage, name, rows, digest, columns); HttpFacadeSpec replays
+  // the prompts through the facade
+  val dataGolden: Seq[(String, String, String, Int, String, String)] = Seq(
     ("Which regions have growing sales but declining satisfaction?",
       "template", "regions_growth_vs_csat", 2, "ddc777bebb5f", "region,slope_sales,slope_sat,n"),
     ("What are the top two products for customers under 30?",
@@ -71,40 +111,4 @@ class GoldenPromptsSpec extends SparkSpec {
     ("Based on historical patterns, what are the projected sales for the next quarter by product and region, and where should we allocate additional resources?",
       "intent", "sum(sales) by quarter over region, product", 509, "06a79f6e9a21", "period,region,product,value"),
   )
-
-  // (prompt, reason-prefix) — doc-routed prompts never reach the data engine
-  private val docGolden: Seq[(String, String)] = Seq(
-    ("What are some of the domains that are accepting of time series analysis and predictions?",
-      "routed to docs: No strong"),
-    ("Summarize the key ideas from the Walmart PDF",
-      "routed to docs: Explicit doc"),
-    ("How can AI be a core component of value creation in a business model?",
-      "routed to docs: No strong"),
-    ("What does business intelligence refer to and what are it's ultimate goals?",
-      "routed to docs: No strong"),
-  )
-
-  test("all 22 data prompts: stage, plan, shape, and result digest are stable") {
-    dataGolden.foreach { case (prompt, stage, name, nRows, dig, cols) =>
-      AskAi.answerWithDiscovery(spark, prompt, sales) match {
-        case Right(a) =>
-          assert(a.stage === stage, s"stage drift for: $prompt")
-          assert(a.name === name, s"plan drift for: $prompt")
-          assert(a.table.columns.mkString(",") === cols, s"schema drift for: $prompt")
-          val rows = a.table.collect()
-          assert(rows.length === nRows, s"row-count drift for: $prompt")
-          assert(digest(rows) === dig, s"result drift for: $prompt")
-        case Left(r) => fail(s"unexpected docs route for: $prompt ($r)")
-      }
-    }
-  }
-
-  test("all 4 doc prompts stay off the data engine with the reference reason") {
-    docGolden.foreach { case (prompt, prefix) =>
-      AskAi.answerWithDiscovery(spark, prompt, sales) match {
-        case Left(reason) => assert(reason.startsWith(prefix), s"$prompt → $reason")
-        case Right(a)     => fail(s"unexpected data answer (${a.stage}) for: $prompt")
-      }
-    }
-  }
 }

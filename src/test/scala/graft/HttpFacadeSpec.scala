@@ -1,9 +1,14 @@
 package graft
 
-import graft.api.{HttpFacade, MiniJson}
+import graft.api.{AskAi, HttpFacade, LlmPorts, MiniJson}
+import graft.core.Num
+import graft.intent.{IntentParser, SalesView}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.col
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.collection.concurrent.TrieMap
 
 /** End-to-end HTTP coverage of the facade: every reference endpoint
   * (`/root/reference/api/main.py:629-1505`) served by the engine and hit
@@ -16,14 +21,78 @@ class HttpFacadeSpec extends SparkSpec {
   private lazy val client = HttpClient.newHttpClient()
   private def base = s"http://127.0.0.1:${facade.boundPort}"
 
-  override def afterAll(): Unit = {
-    try facade.stop()
-    finally super.afterAll()
+  /** Spark jobs and shuffle bytes written per job group, with each
+    * group's description.
+    */
+  private object groups extends SparkListener {
+    val description = TrieMap.empty[String, String]
+    val jobs = TrieMap.empty[String, Int]
+    val shuffleWritten = TrieMap.empty[String, Long]
+    val ended = TrieMap.empty[String, Unit]
+    private val groupOfJob = TrieMap.empty[Int, String]
+    private val groupOfStage = TrieMap.empty[Int, String]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          description(g) = e.properties.getProperty("spark.job.description")
+          jobs(g) = jobs.getOrElse(g, 0) + 1
+          groupOfJob(e.jobId) = g
+          e.stageIds.foreach(groupOfStage(_) = g)
+        }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      groupOfJob.get(e.jobId).foreach(ended(_) = ())
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for (g <- groupOfStage.get(e.stageId); m <- Option(e.taskMetrics))
+        shuffleWritten(g) = shuffleWritten.getOrElse(g, 0L) +
+          m.shuffleWriteMetrics.bytesWritten
+  }
+  spark.sparkContext.addSparkListener(groups)
+  private val fences = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Waits until the listener has seen every event posted so far: the bus
+    * delivers in order, so a job run here ends after all earlier ones.
+    */
+  private def drainListener(): Unit = {
+    val g = s"fence-${fences.incrementAndGet()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(g, "listener fence")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!groups.ended.contains(g)) {
+      assert(System.nanoTime() < deadline, "listener bus did not drain")
+      Thread.sleep(5)
+    }
   }
 
-  private def get(path: String): (Int, Any) = {
+  /** Runs `request` and returns its one job group's (description, jobs,
+    * shuffle bytes written).
+    */
+  private def sparkWork(request: => Any): (String, Int, Long) = {
+    drainListener()
+    val before = groups.description.keySet
+    request
+    drainListener()
+    val mine = groups.description.keySet.diff(before).filter(_.startsWith("http-"))
+    assert(mine.size === 1, s"request job groups: $mine")
+    val g = mine.head
+    (groups.description(g), groups.jobs(g), groups.shuffleWritten.getOrElse(g, 0L))
+  }
+
+  override def afterAll(): Unit = {
+    try facade.stop()
+    finally {
+      spark.sparkContext.removeSparkListener(groups)
+      super.afterAll()
+    }
+  }
+
+  private def get(path: String): (Int, Any) = getAt(base, path)
+
+  private def getAt(at: String, path: String): (Int, Any) = {
     val r = client.send(
-      HttpRequest.newBuilder(URI.create(s"$base$path")).GET().build(),
+      HttpRequest.newBuilder(URI.create(s"$at$path")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), MiniJson.parse(r.body()))
   }
@@ -258,5 +327,90 @@ class HttpFacadeSpec extends SparkSpec {
     assert(asObj(v("b"))("c") === "é")
     // writer escapes control chars and quotes
     assert(MiniJson.write("a\"b\n\u0001") === "\"a\\\"b\\n\\u0001\"")
+  }
+
+  // ---- resident inputs ----------------------------------------------------
+
+  private def rowsOf(v: Any): List[List[Any]] = asArr(v).map(asArr)
+  /** Spark rows in the shape the facade renders them. */
+  private def rendered(rows: Array[org.apache.spark.sql.Row]): List[List[Any]] =
+    rows.toList.map(r => asArr(MiniJson.parse(MiniJson.write(r.toSeq))))
+  private def sorted(rows: List[List[Any]]): List[String] =
+    rows.map(_.toString).sorted
+
+  private val intentPrompt = "What positive trends are evident in each of the regions?"
+  private def askBody(q: String) = MiniJson.obj("query" -> q).json
+
+  test("a warm BI request runs one Spark job and writes no shuffle") {
+    val path = "/bi/top-products-under-30?limit=2"
+    assert(get(path)._1 === 200)
+    val (description, jobs, shuffle) = sparkWork(assert(get(path)._1 === 200))
+    assert(description === "GET /bi/top-products-under-30")
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+  }
+
+  test("a warm intent-stage /rag/query runs one Spark job and writes no shuffle") {
+    val (c0, b0) = post("/rag/query", askBody(intentPrompt))
+    assert(c0 === 200)
+    assert(asObj(b0)("stage") === "intent")
+    val (description, jobs, shuffle) =
+      sparkWork(assert(post("/rag/query", askBody(intentPrompt))._1 === 200))
+    assert(description === "POST /rag/query")
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+  }
+
+  test("a warm forecast runs at most 4 Spark jobs") {
+    val path = "/api/ts-forecast-v2?h=7&algo=seasonal7"
+    assert(get(path)._1 === 200)
+    val (_, jobs, _) = sparkWork(assert(get(path)._1 === 200))
+    assert(jobs <= 4)
+  }
+
+  test("the facade answers the golden data prompts and the daily series as a plain sales view does") {
+    val plain = SalesView(spark, sf)
+    val domains = IntentParser.discoverDomains(plain)
+    GoldenPromptsSpec.dataGolden.map(_._1).foreach { q =>
+      val (c, b) = post("/rag/query", askBody(q))
+      assert(c === 200, q)
+      val table = asObj(asObj(b)("table"))
+      val got = rowsOf(table("rows"))
+      AskAi.answer(spark, q, plain, domains,
+        Some(qq => LlmPorts.fakeSqlGen(qq, ""))) match {
+        case Right(a) =>
+          assert(asObj(b)("stage") === a.stage, q)
+          assert(asArr(table("headers")) === a.table.columns.toList, q)
+          val want = rendered(a.table.collect())
+          // the facade previews 200 rows of an unordered result: a larger
+          // answer must contain them, a smaller one equal them
+          assert(got.length === math.min(want.length, 200), q)
+          if (want.length <= 200) assert(sorted(got) === sorted(want), q)
+          else assert(sorted(got).diff(sorted(want)).isEmpty, q)
+        case Left(r) => fail(s"unexpected docs route for: $q ($r)")
+      }
+    }
+    val daily = plain.groupBy(col("date")).agg(Num.dsum(col("sales")).as("sales"))
+      .orderBy("date").collect()
+    assert(rowsOf(asObj(get("/ts/sales-daily")._2)("rows")) === rendered(daily))
+  }
+
+  test("stopping one facade leaves another on the same session answering") {
+    val kpi = rendered(graft.operators.Kpi.q50Kpi.plan(spark, sf).collect()).head
+    val daily = asObj(get("/ts/sales-daily")._2)("rows")
+    val second = new HttpFacade(spark, sf).start()
+    try {
+      val at = s"http://127.0.0.1:${second.boundPort}"
+      val first = new HttpFacade(spark, sf).start()
+      // both load the same inputs, so they share the cached frames
+      try {
+        assert(getAt(s"http://127.0.0.1:${first.boundPort}", "/ts/sales-daily")._1 === 200)
+        assert(getAt(at, "/ts/sales-daily")._1 === 200)
+      } finally first.stop()
+      assert(asObj(getAt(at, "/ts/sales-daily")._2)("rows") === daily)
+      val o = asObj(getAt(at, "/analytics/kpi")._2)
+      assert(Seq("total_sales", "avg_satisfaction", "top_region", "top_product")
+        .map(o) === kpi)
+    } finally second.stop()
   }
 }
