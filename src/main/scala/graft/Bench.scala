@@ -1,6 +1,11 @@
 package graft
 
+import graft.core.Session
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Prints ONE JSON line with per-query wall-clock seconds.
   *
@@ -10,77 +15,150 @@ import org.apache.spark.sql.SparkSession
   * empty-column scan. Before timing, each query runs once at sf0.001: same
   * plan shape → whole-stage-codegen classes are compiled and cached, so the
   * timed run doesn't absorb JIT/codegen startup.
+  *
+  * Each query's record also carries the Spark work of its last timed pass
+  * ([[Bench.Counters]]). `SPARK_GRAFT_ONLY=q31,q34 SPARK_GRAFT_PASSES=N`
+  * times a subset, prints one line per query to stderr and writes no
+  * artifact.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // Force the SORT-BASED shuffle writer (round 14, guide §2.1): below
-      // this threshold Spark's bypass-merge writer opens ONE FILE PER
-      // REDUCE PARTITION PER MAP TASK — at 32 shuffle partitions a
-      // multi-stage catalog query performs hundreds of file opens +
-      // compression-stream inits for kilobyte shuffles (driver-stack
-      // sampling: DiskBlockObjectWriter.initialize was the single hottest
-      // executor frame, ~30% of runnable samples; task CPU on the
-      // order-statistics family halved with the sort writer — q163 20.8 →
-      // 10.6 executor-s, q128 9.2 → 6.4). At production partition counts
-      // (≫ 200) the bypass path never runs, so this also makes the local
-      // code path the same one a 100 TB shuffle exercises.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // NOTE: no spark.speculation here. It was set in rounds 7-8, but
-      // Spark's TaskSchedulerImpl.start() never launches the speculation
-      // thread under a local[N] master, so it was a no-op (ADVICE r8);
-      // the straggler gains previously attributed to it came from the
-      // per-query System.gc() isolation below and run-to-run variance.
-      // On a real cluster master, enable it in the submit conf instead.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  val WarmDir = "/root/testdata/sf0.001"
 
-    def exec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit = {
-      // drop ONLY this query's localCheckpoint blocks after it runs: each
-      // run rebuilds its own, and letting them accumulate across 99 queries
-      // puts storage memory pressure on later ones (q34 measured 20s alone
-      // vs 33s after q31/q33's checkpoints piled up at sf1). Snapshotting
-      // the pre-existing ids keeps any cross-query cache — and especially
-      // locally-checkpointed RDDs, whose truncated lineage cannot be
-      // recomputed — alive across queries.
-      val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preExisting.contains(id)) rdd.unpersist(false)
+  /** Spark work of one timed pass, counting only the jobs of the pass's
+    * job group. `gapMs` is the pass wall minus the union of those jobs'
+    * intervals: driver-only time (planning, AQE re-optimization, collect
+    * processing) between and around the jobs.
+    */
+  final case class Counters(jobs: Int, stages: Int, tasks: Int, taskMs: Long,
+      shuffleWriteB: Long, shuffleReadB: Long, gapMs: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_s":${r3(taskMs / 1e3)},""" +
+        s""""shuffle_write_kb":${r1(shuffleWriteB / 1024.0)},""" +
+        s""""shuffle_read_kb":${r1(shuffleReadB / 1024.0)},"gap_ms":$gapMs}"""
+    def line: String =
+      s"$jobs jobs $stages stages $tasks tasks ${r3(taskMs / 1e3)} task-s " +
+        s"shuf ${r1(shuffleWriteB / 1024.0)}KB/w ${r1(shuffleReadB / 1024.0)}KB/r gap ${gapMs}ms"
+  }
+
+  final case class Pass(wallS: Double, counters: Counters)
+
+  /** One query under the bench protocol: `basis` is the median basis
+    * (stall re-runs swapped in), `stalled` the host-stall times they
+    * replaced, `counters` the work of the last pass run.
+    */
+  final case class Measured(name: String, basis: Seq[Double], stalled: Seq[Double],
+      headS: Double, counters: Counters)
+
+  private def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  // Locale.ROOT: under a comma-decimal default locale (de_DE etc.) f"%.3f"
+  // would emit "0,123" — invalid JSON on the one line that must parse.
+  def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  def r1(v: Double): String = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+
+  /** Writes `bench/<file>` (relative to the working directory, the repo
+    * root under `sbt run`). A failure is not fatal but warns on stderr: a
+    * silently stale artifact would contradict the numbers on stdout.
+    */
+  def writeArtifact(file: String, text: String): Unit =
+    try {
+      Files.createDirectories(Paths.get("bench"))
+      Files.write(Paths.get("bench", file), text.getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] WARNING: writing bench/$file failed (${e.getMessage}); " +
+        "the committed artifact is now stale relative to stdout")
+    }
+
+  def cpuModel: String =
+    try scala.io.Source.fromFile("/proc/cpuinfo").getLines()
+      .collectFirst { case l if l.startsWith("model name") => l.split(":").last.trim }
+      .getOrElse("unknown")
+    catch { case _: Throwable => "unknown" }
+
+  /** Runs catalog queries the bench way on `spark`: each run is a `noop`
+    * write inside [[SparkEntry.scoped]] (job group = query name), and a
+    * listener on the job group counts each timed pass's work. The listener
+    * bus is drained before counters are reset and read, so no event lands
+    * in the wrong pass. `close()` removes the listener.
+    */
+  final class Runner(spark: SparkSession, passes: Int = 3) extends SparkListener {
+    private val sc = spark.sparkContext
+    private var group = ""
+    private val jobSpans = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+    private val counted = scala.collection.mutable.HashSet.empty[Int]
+    private var stages, tasks = 0
+    private var taskMs, shw, shr = 0L
+
+    sc.addSparkListener(this)
+    def close(): Unit = sc.removeSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty(GraftBus.JobGroupKey) == group)) {
+        jobSpans(e.jobId) = (e.time, e.time)
+        counted ++= e.stageIds
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobSpans.get(e.jobId).foreach { case (st, _) => jobSpans(e.jobId) = (st, e.time) }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      if (counted(e.stageInfo.stageId)) stages += 1
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (counted(e.stageId)) {
+        tasks += 1
+        Option(e.taskMetrics).foreach { m =>
+          taskMs += m.executorRunTime
+          shw += m.shuffleWriteMetrics.bytesWritten
+          shr += m.shuffleReadMetrics.totalBytesRead
+        }
       }
     }
 
-    // Optional subset (e.g. SPARK_GRAFT_ONLY=q01,q12,q45): local slope/scale
-    // experiments on the data-heavy queries without running the catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n.takeWhile(_ != '_'))))
-      // stream-parity harness queries run in the CORRECTNESS gate only: a
-      // bench pass would time streaming start/stop + memory-sink
-      // materialization, not operator throughput (which EventStreamsSpec/
-      // DocStreamsSpec measure against the batch plans)
-      .filterNot(n => n.contains("_stream_") && n.endsWith("_parity"))
-    // a typo'd subset must fail loudly, not emit a zero-query "measurement"
-    only.foreach { o =>
-      val matched = names.map(_.takeWhile(_ != '_')).toSet
-      require(o.subsetOf(matched),
-        s"SPARK_GRAFT_ONLY entries matched no query: ${(o -- matched).mkString(",")}")
+    private def reset(name: String): Unit = synchronized {
+      group = name
+      jobSpans.clear(); counted.clear()
+      stages = 0; tasks = 0; taskMs = 0; shw = 0; shr = 0
     }
-    // Warm-up pass at tiny scale: compiles codegen per query shape cheaply.
-    names.foreach { n =>
-      try exec(SparkEntry.queries(n), warmDir)
+
+    /** Milliseconds covered by at least one job interval. */
+    private def unionMs: Long = {
+      val spans = jobSpans.values.toSeq.sortBy(_._1)
+      spans.foldLeft((0L, Long.MinValue)) { case ((sum, reach), (st, en)) =>
+        if (en <= reach) (sum, reach)
+        else (sum + en - math.max(st, reach), en)
+      }._1
+    }
+
+    private def exec(name: String, dir: String): Unit =
+      SparkEntry.scoped(spark, name) {
+        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      }
+
+    /** Untimed run (codegen warm-up); a failure is left to the timed passes. */
+    def warm(name: String, dir: String): Unit =
+      try exec(name, dir) catch { case _: Throwable => () }
+
+    /** One timed pass of `name` over `dir` with its counters. */
+    def pass(name: String, dir: String): Pass = {
+      GraftBus.drain(sc)
+      reset(name)
+      val t0Ms = System.currentTimeMillis()
+      val t0 = System.nanoTime()
+      try exec(name, dir)
       catch { case _: Throwable => () }
+      val wallS = (System.nanoTime() - t0) / 1e9
+      // job times come from the same millisecond clock
+      val wallMs = System.currentTimeMillis() - t0Ms
+      GraftBus.drain(sc)
+      synchronized {
+        Pass(wallS, Counters(jobSpans.size, stages, tasks, taskMs, shw, shr, wallMs - unionMs))
+      }
     }
+
     // THREE timed passes per query (VERDICT r7 next-1): this host shows a
     // documented ±40% run-to-run band, so a single pass is not a
     // measurement. The MEDIAN is the committed headline (robust to one
@@ -96,49 +174,12 @@ object Bench {
     // extra passes cost nothing material precisely because the queries
     // are sub-second. Expensive queries keep the 3-pass protocol — their
     // medians are shuffle-bound, not launch-noise-bound.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     // 2.5 s: wide enough to cover the 1.5-2.5 s class whose 3-pass runs
     // showed the same one-sided warm-up decay (q121 [3.49,1.73,1.27],
     // q128 [2.40,1.59,1.21] at sf1); the true heavies (>2.5 s) stay
     // 3-pass - their medians are shuffle-bound, and two extra passes of
     // q34/q88-class queries would add minutes per catalog run
-    val SubSecCut = 2.5
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    // headline per-query time: median of the last `passes` runs (all runs
-    // when no extras were taken)
-    def headline(ts: Seq[Double]): Double = median(ts.takeRight(passes))
-    // Locale.ROOT: under a comma-decimal default locale (de_DE etc.) f"%.3f"
-    // would emit "0,123" — invalid JSON on the one line that must parse.
-    def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def msOf(v: Double): String = math.round(v * 1000).toString
-    // SIGTERM insurance: 3 timed passes per query made a full run ~3×
-    // longer, so an external timeout (the driver's, a CI's) killing the
-    // JVM mid-run would otherwise lose EVERY measurement. A shutdown hook
-    // emits the queries measured so far as a clearly-marked
-    // {"partial":true} line (medians of completed queries only); the
-    // normal path REMOVES the hook before printing the real line, so a
-    // clean run can never double-print. SIGKILL still loses the run —
-    // nothing can hook that.
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Double], Seq[Double])]()
-    val partialHook = new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      val rs = done.asScala.toSeq
-      if (rs.nonEmpty) {
-        val qj = rs.map { case (k, ts, _) =>
-          "\"" + k.takeWhile(_ != '_').stripPrefix("q") + "\":" + msOf(headline(ts))
-        }.mkString("{", ",", "}")
-        println(s"""{"metric":"total","value":${r3(rs.map(r => headline(r._2)).sum)},"partial":true,"n_done":${rs.size},"unit":"sec","qunit":"ms","queries":$qj,"sf":"$sfDir"}""")
-      }
-    })
-    Runtime.getRuntime.addShutdownHook(partialHook)
-    // SPARK_GRAFT_NO_GC=1 disables the per-query GC so its effect can be
-    // A/B-measured in isolation (ADVICE r8: the speculation configs were
-    // no-ops under local[N], so this isolation is the mechanism that must
-    // carry the attribution — and it has to be toggleable to prove it)
-    val gcIsolate = !sys.env.contains("SPARK_GRAFT_NO_GC")
+    private val SubSecCut = 2.5
     // STALL REPAIR (VERDICT r11 #1): this host injects multi-second
     // scheduler stalls into 1-3 random queries per full run (documented in
     // PERF.md: q164 pass-1 8.37 s vs 0.94 s clean medians; q85 62.5 s once
@@ -159,10 +200,15 @@ object Bench {
     // never flagged, so a genuinely slow plan — where ALL passes are
     // slow — keeps every pass: stall repair can only remove one-sided
     // host spikes, never a consistent cost.
-    val StallRerunCap = 2
-    def isStall(t: Double, mn: Double): Boolean =
+    private val StallRerunCap = 2
+    private def isStall(t: Double, mn: Double): Boolean =
       t > mn + math.max(2.0, 0.5 * mn)
-    val results: Seq[(String, Seq[Double], Seq[Double])] = names.map { n =>
+
+    /** The per-query bench protocol: `passes` timed passes, stall repair,
+      * and two extra passes for sub-second queries; the headline is the
+      * median of the last `passes` runs.
+      */
+    def measure(name: String, dir: String): Measured = {
       // GC between queries, OUTSIDE the timed region: Spark's
       // ContextCleaner frees dead shuffle files / broadcasts only when a
       // JVM GC collects their references, so without this the 154th query
@@ -170,26 +216,13 @@ object Bench {
       // standalone vs 4.2-5.5 s late in the catalog). An explicit GC per
       // query makes each measurement start from comparable heap/disk
       // conditions — the per-query isolation a per-job cluster gets free.
-      if (gcIsolate) System.gc()
-      def timedPass(i: Int): Double = {
-        // SPARK_GRAFT_GC_PER_PASS additionally GCs before passes 2..n
-        // (outside the timed region) — experiment hook, OFF by default.
-        // Hypothesis: a big-shuffle query's later passes compete with
-        // their own predecessors' shuffle files (ContextCleaner reclaims
-        // only after a GC). Measured full-catalog sf1 A/B
-        // (bench/bench_ab_gcperpass_sf1.json vs the committed record):
-        // NO overall win — 315.2 s vs 251.8 s total; the winsor/KL
-        // family halves (q122 5.1→2.6, q127 6.6→2.2) but perplexity/
-        // minhash regress (q132 6.0→10.8, q31 10.6→14.2), so the
-        // default stays per-QUERY isolation only.
-        if (gcIsolate && i > 1 && sys.env.contains("SPARK_GRAFT_GC_PER_PASS"))
-          System.gc()
-        val t0 = System.nanoTime()
-        try exec(SparkEntry.queries(n), sfDir)
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      var basis = (1 to passes).map(timedPass).toVector
+      // Measured alternatives, both rejected: no GC at all
+      // (bench/bench_ab_nogc_sf0.1.json), and a GC before every pass — no
+      // overall win at sf1, 315.2 s vs 251.8 s (bench/bench_ab_gcperpass_sf1.json).
+      System.gc()
+      var last: Pass = null
+      def timedPass(): Double = { last = pass(name, dir); last.wallS }
+      var basis = Vector.fill(passes)(timedPass())
       var stalledTimes = Vector.empty[Double]
       // stall sweep: replace flagged passes in place (so takeRight-based
       // headlines keep their pass-position semantics); a re-run can lower
@@ -203,7 +236,7 @@ object Bench {
             case -1 => sweeping = false
             case i =>
               stalledTimes :+= basis(i)
-              basis = basis.updated(i, timedPass(passes + stalledTimes.size))
+              basis = basis.updated(i, timedPass())
           }
         }
       }
@@ -215,16 +248,63 @@ object Bench {
       // repaired upstream, the median is trustworthy again and a 2-of-3
       // majority under the cut is what it takes to reclassify).
       if (median(basis) < SubSecCut) {
-        basis ++= (1 to 2).map(i => timedPass(basis.size + stalledTimes.size + i))
+        basis ++= Vector.fill(2)(timedPass())
         // the EXTRA passes are in the headline basis (median of the last
         // `passes`), so they need the same stall repair — first observed
         // live: q164 base [2.28, 1.20, 1.21] clean, extras hit 12.1 s and
         // 37.6 s host stalls and would have become the committed headline
         sweep()
       }
-      done.add((n, basis, stalledTimes))
-      (n, basis, stalledTimes)
+      Measured(name, basis, stalledTimes, median(basis.takeRight(passes)), last.counters)
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.local()
+    // Optional subset (e.g. SPARK_GRAFT_ONLY=q01,q12,q45): local slope/scale
+    // experiments on the data-heavy queries without running the catalog.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val names = SparkEntry.select(only)
+      // stream-parity harness queries run in the CORRECTNESS gate only: a
+      // bench pass would time streaming start/stop + memory-sink
+      // materialization, not operator throughput (which EventStreamsSpec/
+      // DocStreamsSpec measure against the batch plans)
+      .filterNot(n => n.contains("_stream_") && n.endsWith("_parity"))
+    require(names.nonEmpty, s"SPARK_GRAFT_ONLY=${only.getOrElse("")} selects no benched query")
+    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+    val runner = new Runner(spark, passes)
+    // Warm-up pass at tiny scale: compiles codegen per query shape cheaply.
+    names.foreach(runner.warm(_, WarmDir))
+    def msOf(v: Double): String = math.round(v * 1000).toString
+    // SIGTERM insurance: 3 timed passes per query made a full run ~3×
+    // longer, so an external timeout (the driver's, a CI's) killing the
+    // JVM mid-run would otherwise lose EVERY measurement. A shutdown hook
+    // emits the queries measured so far as a clearly-marked
+    // {"partial":true} line (medians of completed queries only); the
+    // normal path REMOVES the hook before printing the real line, so a
+    // clean run can never double-print. SIGKILL still loses the run —
+    // nothing can hook that.
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[Measured]()
+    val partialHook = new Thread(() => {
+      import scala.jdk.CollectionConverters._
+      val rs = done.asScala.toSeq
+      if (rs.nonEmpty) {
+        val qj = rs.map { m =>
+          "\"" + m.name.takeWhile(_ != '_').stripPrefix("q") + "\":" + msOf(m.headS)
+        }.mkString("{", ",", "}")
+        println(s"""{"metric":"total","value":${r3(rs.map(_.headS).sum)},"partial":true,"n_done":${rs.size},"unit":"sec","qunit":"ms","queries":$qj,"sf":"$sfDir"}""")
+      }
+    })
+    Runtime.getRuntime.addShutdownHook(partialHook)
+    val results: Seq[Measured] = names.map { n =>
+      val m = runner.measure(n, sfDir)
+      if (only.nonEmpty) System.err.println(
+        f"$n%-30s med ${m.headS}%6.2f s  runs ${m.basis.map(r3).mkString(" ")}  [last pass: ${m.counters.line}]")
+      done.add(m)
+      m
+    }
+    runner.close()
     Runtime.getRuntime.removeShutdownHook(partialHook)
     // Driver-line compact form: integer MILLISECONDS via msOf (declared
     // "qunit":"ms" on the line). Sub-second queries — most of the
@@ -238,48 +318,38 @@ object Bench {
     // budget) and times rounded to integer ms so the whole line stays well
     // under that window; full names + the DuckDB side-by-side go to
     // bench/bench_side_by_side.json instead.
-    val shortKeys = results.map(_._1.takeWhile(_ != '_').stripPrefix("q"))
+    val shortKeys = results.map(_.name.takeWhile(_ != '_').stripPrefix("q"))
     require(shortKeys.distinct.size == shortKeys.size,
       s"bench key collision after qNN-shortening: ${shortKeys.diff(shortKeys.distinct).distinct.mkString(",")}")
     // driver-line per-query value = the protocol headline (median of the
     // last `passes` runs; see SubSecCut above)
-    val heads = shortKeys.zip(results.map(r => headline(r._2)))
-    val total = results.map(r => headline(r._2)).sum
-    val totalMin = results.map(_._2.min).sum
+    val heads = shortKeys.zip(results.map(_.headS))
+    val total = results.map(_.headS).sum
+    val totalMin = results.map(_.basis.min).sum
 
     val sfSuffix = sfDir.split("sf").last
-    val baselinePath =
-      s"/root/repo/bench/duckdb_baseline_sf$sfSuffix.json"
+    val baselinePath = Paths.get("bench", s"duckdb_baseline_sf$sfSuffix.json")
     val duck =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(baselinePath)), "UTF-8").trim
-        s""","duckdb_baseline":$txt"""
-      } catch { case _: Throwable => "" }
+      try s""","duckdb_baseline":${new String(Files.readAllBytes(baselinePath), "UTF-8").trim}"""
+      catch { case _: Throwable => "" }
     // full per-query band: {min, med, runs[], stalled[]?} — the committed
     // artifact the judge can reconcile against any single driver run. The
     // "runs" array is the MEDIAN BASIS (stall re-runs already swapped in);
     // "stalled" lists the host-stall times those re-runs replaced, present
     // only when the sweep fired, so `grep stalled` over the artifact is the
-    // per-run stall census.
-    val fullQs = results.map { case (k, ts, st) =>
-      val runs = ts.map(r3).mkString("[", ",", "]")
-      val stall = if (st.isEmpty) ""
-        else ",\"stalled\":" + st.map(r3).mkString("[", ",", "]")
-      "\"" + k + "\":{\"min\":" + r3(ts.min) + ",\"med\":" + r3(headline(ts)) +
-        ",\"runs\":" + runs + stall + "}"
+    // per-run stall census. "counters" is the last pass's Spark work.
+    val fullQs = results.map { m =>
+      val runs = m.basis.map(r3).mkString("[", ",", "]")
+      val stall = if (m.stalled.isEmpty) ""
+        else ",\"stalled\":" + m.stalled.map(r3).mkString("[", ",", "]")
+      "\"" + m.name + "\":{\"min\":" + r3(m.basis.min) + ",\"med\":" + r3(m.headS) +
+        ",\"runs\":" + runs + stall + ",\"counters\":" + m.counters.json + "}"
     }.mkString("{", ",", "}")
     // Host fingerprint (VERDICT r8 #2): two runs of the same code can land
     // 25% apart across hosts, so every committed band records WHERE it was
     // measured — cpu model, visible cores, and a single-core integer-ALU
     // burn (xorshift64, fixed iteration count) as a portable speed probe.
     // Comparing two artifacts starts with comparing their burn_ms.
-    val cpuModel =
-      try scala.io.Source.fromFile("/proc/cpuinfo").getLines()
-        .collectFirst { case l if l.startsWith("model name") =>
-          l.split(":").last.trim }
-        .getOrElse("unknown")
-      catch { case _: Throwable => "unknown" }
     val burnMs = {
       var x = 88172645463325252L; var i = 0
       val t0 = System.nanoTime()
@@ -293,8 +363,8 @@ object Bench {
     val host =
       s""","host":{"cpu":${"\"" + cpuModel.replace("\"", "") + "\""},""" +
         s""""cores":${Runtime.getRuntime.availableProcessors()},""" +
-        s""""burn_ms":$burnMs,"gc_isolation":$gcIsolate}"""
-    val stallReruns = results.map(_._3.size).sum
+        s""""burn_ms":$burnMs}"""
+    val stallReruns = results.map(_.stalled.size).sum
     val side =
       s"""{"metric":"total","value":${r3(total)},"total_min":${r3(totalMin)},"passes":$passes,"stall_reruns":$stallReruns,"unit":"sec","queries":$fullQs,"sf":"$sfDir"$host$duck}"""
     // only FULL runs WITH a matching DuckDB baseline persist the
@@ -303,16 +373,9 @@ object Bench {
     // clobber a graded record. The graded sf0.1 run keeps the historical
     // filename the judge reads; other SFs (sf1) write an sf-suffixed
     // sibling so the two artifacts coexist (VERDICT r7 next-2).
-    val hasBaseline = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(baselinePath))
     val sidePath = if (sfSuffix == "0.1") "bench_side_by_side.json"
                    else s"bench_side_by_side_sf$sfSuffix.json"
-    if (only.isEmpty && hasBaseline) try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/root/repo/bench"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"/root/repo/bench/$sidePath"),
-        side.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    if (only.isEmpty && Files.exists(baselinePath)) writeArtifact(sidePath, side)
 
     // silence everything (incl. shutdown-hook WARNs that fire after main
     // returns) so no log line can land after the JSON in a merged

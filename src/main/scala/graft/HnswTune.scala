@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench.r3
+import graft.core.Session
 import org.apache.spark.sql.functions._
 
 /** EfClustered beam-tuning main (VERDICT r12 #3): measures q181's global
@@ -18,19 +19,7 @@ object HnswTune {
     val efs = args.lift(1).getOrElse("96,192,400")
       .split(",").map(_.trim.toInt).toSeq
     val warmDir = args.lift(2).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sort-based shuffle writer at any width — see Bench.scala's note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = Session.local()
     // one untimed pass at the TARGET sfDir before the sweep: the smoke-SF
     // warm-up compiles codegen but leaves the target's file cache cold, so
     // the FIRST swept ef paid the cold-read cost and its wall_s read high
@@ -57,18 +46,9 @@ object HnswTune {
       line
     }
     val sfSuffix = sfDir.split("sf").last
-    // the artifact is DECISION EVIDENCE (EfClusteredDefault cites it) — a
-    // silent write failure would let it go stale while stdout shows fresh
-    // numbers (ADVICE r13), so the failure is loud even though non-fatal
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        s"/root/repo/bench/hnsw_efclustered_tune_sf$sfSuffix.json"),
-      lines.mkString("[", ",\n ", "]").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(
-        s"[hnswtune] WARNING: sweep artifact write failed (${e.getMessage}) — " +
-          "bench/hnsw_efclustered_tune_*.json is now stale relative to stdout")
-    }
+    // the artifact is DECISION EVIDENCE (EfClusteredDefault cites it)
+    Bench.writeArtifact(s"hnsw_efclustered_tune_sf$sfSuffix.json",
+      lines.mkString("[", ",\n ", "]"))
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.{HttpFacade, LlmPorts, OllamaClient, OllamaConfig, Rag}
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Service main: start the HTTP facade over a local SparkSession and block.
   *
@@ -15,19 +15,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val port = sys.env.getOrElse("SPARK_GRAFT_PORT", "8000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // speculation is deliberately NOT set: under a local[N] master
-      // Spark never starts the speculation thread (no-op; ADVICE r8).
-      // On a real cluster deployment pass spark.speculation=true in the
-      // submit conf, where it is the standard slow-executor mitigation.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // config-gated real model backends (reference env wiring): with
     // OLLAMA_BASE_URL set, chat/embed speak real HTTP through the
     // retry/backoff contract; otherwise the deterministic fakes serve

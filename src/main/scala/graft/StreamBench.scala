@@ -1,5 +1,7 @@
 package graft
 
+import graft.Bench.{r1, r3}
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -69,17 +71,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/bench/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sort-based shuffle writer at any width — see Bench.scala's note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     drain(spark, stage(spark, "/root/testdata/sf0.001")) // codegen warm-up
     val staged = stage(spark, sfDir)
@@ -113,22 +105,12 @@ object StreamBench {
     val batchPasses = (1 to Passes).map(_ => batchPass())
     val bmed = batchPasses.sortBy(_._2)(Ordering.Double.TotalOrdering)(Passes / 2)
 
-    def r1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     // trigS sums triggerExecution durations, which can be 0 (key absent
     // from a batch's durationMs, or all batches sub-millisecond) — a bare
     // division would print Infinity/NaN and make the JSON artifact
     // unparseable (ADVICE r12). Emit JSON null instead.
     def rps(rows: Long, s: Double): String =
       if (s > 0) r1(rows / s) else "null"
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val cpuModel =
-      try scala.io.Source.fromFile("/proc/cpuinfo").getLines()
-        .collectFirst { case l if l.startsWith("model name") =>
-          l.split(":").last.trim }
-        .getOrElse("unknown")
-      catch { case _: Throwable => "unknown" }
     def passesJson(ps: Seq[PassResult]): String = ps.map(p =>
       s"""{"rows":${p.rows},"batches":${p.batches},"wall_s":${r3(p.wallS)},""" +
         s""""trig_s":${r3(p.trigS)},"rows_per_s_wall":${r1(p.rows / p.wallS)},""" +
@@ -153,15 +135,9 @@ object StreamBench {
         s""""batch_wall_s":${r3(bmed._2)},""" +
         s""""stream_vs_batch":${r3((bmed._1 / bmed._2) / (med.rows / med.wallS))},""" +
         s""""batch_passes":$batchJson,""" +
-        s""""sf":"$sfDir","host":{"cpu":"${cpuModel.replace("\"", "")}",""" +
+        s""""sf":"$sfDir","host":{"cpu":"${Bench.cpuModel.replace("\"", "")}",""" +
         s""""cores":${Runtime.getRuntime.availableProcessors()}}}"""
-    try {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("/root/repo/bench"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/bench/stream_throughput.json"),
-        json.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    Bench.writeArtifact("stream_throughput.json", json)
     try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.OFF)
     catch { case _: Throwable => () }

@@ -1,44 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // sort-based shuffle writer at any width — see Bench.scala's note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // local-iteration subset filter (same contract as Bench); driver unset
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ks) => SparkEntry.queries.filter { case (n, _) =>
-        ks.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      // release only THIS query's localCheckpoint blocks (see Bench.exec):
-      // pre-existing persisted RDDs may have truncated lineage and must
-      // survive
-      val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).foreach { name =>
+      try SparkEntry.scoped(spark, name) {
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preExisting.contains(id)) rdd.unpersist(false)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

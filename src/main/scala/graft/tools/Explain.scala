@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Plan auditor: prints the physical plan for the named catalog queries
   * (or a few representative ones) so scan pushdown, join strategy, and
@@ -18,9 +18,6 @@ import org.apache.spark.sql.SparkSession
   * plan root directly and counts rows on the executors; results never
   * materialize on the driver (a collect() would OOM on large-output
   * queries at sf1+).
-  *
-  * The session has Bench's shape (parquet aggregate pushdown, sort-based
-  * shuffle writer), so the plans printed are the plans the bench grades.
   */
 object Explain {
   private val Modes = Set("full", "filtered")
@@ -36,18 +33,7 @@ object Explain {
         "q13_region_revenue", "q01_pricing_summary", "q18_window_rownum")
       case given => given
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // sort-based shuffle writer at any width — see Bench.scala's note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries.get(n) match {

@@ -1,22 +1,15 @@
 package graft.tools
 
 import graft.api.AskAi
+import graft.core.Session
 import graft.intent.SalesView
-import org.apache.spark.sql.SparkSession
 
 /** Scratch: dump stage/name/rows/digest per ui/prompts.txt prompt to pin
   * the golden end-to-end expectations. Not part of the library surface.
   */
 object GoldenDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // decode events.parquet's TIMESTAMP(NANOS) as Bench and Verify do
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val sales = SalesView(spark, "/root/testdata/sf0.001")
     val prompts = scala.io.Source.fromFile("/root/reference/ui/prompts.txt")
       .getLines().toSeq
