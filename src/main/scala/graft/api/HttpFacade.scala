@@ -347,7 +347,7 @@ final class HttpFacade(
   private def regionTrends(regions: Seq[String]): DataFrame =
     sales.filter(col("region").isin(regions: _*))
       .groupBy(
-        date_trunc("month", col("date")).cast("date").as("month"),
+        trunc(col("date"), "month").as("month"),
         col("region"))
       .agg(
         Num.dsum(col("sales")).as("sales"),
@@ -379,8 +379,8 @@ final class HttpFacade(
         "sample_rows" -> rowsJson(sample))
     }
 
-    // `api/main.py:665-688` — the q50 plan over the facade's sales: top-1s
-    // are broadcast joins
+    // `api/main.py:665-688` — the q50 plan over the facade's sales: one
+    // aggregation pass, one job over the resident input
     handle("/analytics/kpi") { _ =>
       val row = graft.operators.Kpi.kpi(sales).collect().head
       200 -> obj(

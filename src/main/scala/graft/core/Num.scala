@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.functions.{DecimalSum128, DoubleUnscaled}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,6 +19,22 @@ import org.apache.spark.sql.types._
   * Scale note: decimal hash aggregation stays inside whole-stage codegen and
   * map-side partial aggregation; the cost over a double sum is a constant
   * factor, not a shuffle.
+  *
+  * Per-row cast: every aggregate here reads its input as an unscaled long
+  * through [[graft.functions.DoubleUnscaled]], not through Spark's
+  * double → decimal cast (`Double.toString` + `BigDecimal` per row). For a
+  * double `d` with `|d| < min(10^(p−s), 2^50·10^−s)` — 1.1e13 money units
+  * at (18,2), 10^6 at (10,4) — it takes `n = round(d·10^s)` when
+  * `n / 10^s == d`. That is exactly the cast's value: below the bound
+  * ulp(d) ≤ ¼·10^−s, so `Double.toString(d)` and `n·10^−s`, both within
+  * half an ulp of `d`, round HALF_UP to the same `s` places. NaN, ±∞,
+  * values past the bound and values with more than `s` decimals run the
+  * cast itself, so null, overflow and ANSI errors are unchanged.
+  *
+  * The catalog's direct `cast(Money)` sums (`Relational`, `ScalePatterns`,
+  * `Analytics`, `Events`, the streaming state in `EventStreams` /
+  * `StreamParity`) stay as they are: their DECIMAL(28,2) results feed
+  * downstream decimal arithmetic or a state-store schema.
   */
 object Num {
   /** Exact carrier for 2-decimal money columns. */
@@ -35,10 +52,7 @@ object Num {
     * a codegen'd two-long 128-bit accumulator instead; the exact decimal
     * result (hence the double) is bit-identical to the previous shape.
     */
-  def dsum(c: Column): Column =
-    graft.functions.DecimalSum128
-      .sumUnscaled(graft.functions.DecimalSum128.unscaled(c.cast(Money)), 2)
-      .cast(DoubleType)
+  def dsum(c: Column): Column = dsumDec(c).cast(DoubleType)
 
   /** [[dsum]] without the double cast — for cell frames whose exact
     * decimal sums re-aggregate downstream (the quantile-bracket family
@@ -48,8 +62,7 @@ object Num {
     * double at the end, so values (and hashes) are unchanged.
     */
   def dsumDec(c: Column): Column =
-    graft.functions.DecimalSum128
-      .sumUnscaled(graft.functions.DecimalSum128.unscaled(c.cast(Money)), 2)
+    DecimalSum128.sumUnscaled(DoubleUnscaled.of(c, Money), 2)
 
   /** AVG via exact decimal sum / count — mirrors the oracle's
     * `CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)/count(x)` shape exactly.
@@ -73,12 +86,9 @@ object Num {
     * silently wrap past 2^63 in legacy mode or throw under ANSI). NULL
     * price or discount contributes nothing, exactly like `sum`.
     */
-  def rsum(price: Column, discount: Column): Column = {
-    import graft.functions.DecimalSum128.{sumProductUnscaled, unscaled}
-    val pu = unscaled(price.cast(Money))
-    val du = unscaled(discount.cast(Frac))
-    sumProductUnscaled(pu, lit(10000L) - du, 6).cast(DoubleType)
-  }
+  def rsum(price: Column, discount: Column): Column =
+    DecimalSum128.sumProductUnscaled(DoubleUnscaled.of(price, Money),
+      lit(10000L) - DoubleUnscaled.of(discount, Frac), 6).cast(DoubleType)
 
   /** Matching oracle-SQL fragments (DuckDB dialect). */
   val sqlDsum: String => String =

@@ -44,7 +44,7 @@ object Forecasters {
     val h = clampH(h0)
     val window = math.max(1, window0) // reference clamp `api/main.py:877-878`
     val base = ranked(daily).filter(col("r") <= window)
-      .agg((sum(col("v").cast(Num.Money)).cast("double") / count(lit(1))).as("base"))
+      .agg((Num.dsum(col("v")) / count(lit(1))).as("base"))
     futureDays(daily, h).crossJoin(broadcast(base))
       .select(
         date_add(col("last_date"), col("i")).as("date"),
@@ -131,7 +131,7 @@ object Forecasters {
       .groupBy("k")
       .agg(
         max(when(col("r") === 1, col("d"))).as("last_date"),
-        (sum(col("v").cast(Num.Money)).cast("double") / count(lit(1))).as("base"))
+        (Num.dsum(col("v")) / count(lit(1))).as("base"))
       .select(col("k"), col("last_date"), col("base"),
         explode(sequence(lit(1), lit(h))).as("i"))
       .select(col("k"),

@@ -50,7 +50,7 @@ object IntentCompiler {
 
     // Two most recent quarters (`api/main.py:452-476`)
     if (intent.compare == (("quarter", "last2"))) {
-      val qtr = date_trunc("quarter", col("date")).cast("date")
+      val qtr = trunc(col("date"), "quarter")
       val top2 = sales.select(qtr.as("period")).distinct()
         .orderBy(col("period").desc).limit(2)
       val aggd = filtered
@@ -66,7 +66,7 @@ object IntentCompiler {
     if (intent.compare._1 == "quarter"
         && Seq("last", "previous").contains(intent.compare._2)) {
       val base = filtered
-        .groupBy(date_trunc("quarter", col("date")).cast("date").as("qtr"))
+        .groupBy(trunc(col("date"), "quarter").as("qtr"))
         .agg(agg(m).as("val"))
       val w = Window.orderBy("qtr")
       val plan = base
@@ -98,7 +98,7 @@ object IntentCompiler {
 
     // Generic time-grain group-by (`api/main.py:521-532`)
     val plan = filtered
-      .groupBy((date_trunc(grain, col("date")).cast("date").as("period")
+      .groupBy((trunc(col("date"), grain).as("period")
         +: intent.dims.map(col)): _*)
       .agg(agg(m).as("value"))
       .orderBy((col("period").asc +: intent.dims.map(d => col(d).asc)): _*)

@@ -49,9 +49,9 @@ object Templates {
     */
   def monthHighestGrowth(sales: DataFrame): DataFrame = {
     val daily = sales.groupBy(col("date"))
-      .agg(sum(col("sales").cast(Num.Money)).as("d_sales"))
+      .agg(Num.dsumDec(col("sales")).as("d_sales"))
     val monthly = daily
-      .groupBy(date_trunc("month", col("date")).cast("date").as("month"))
+      .groupBy(trunc(col("date"), "month").as("month"))
       .agg(sum(col("d_sales")).cast("double").as("m_sales"))
     monthly
       .withColumn("mom_growth",
@@ -75,17 +75,15 @@ object Templates {
   def satisfactionChangeRegionLastQuarter(sales: DataFrame, region: String): DataFrame = {
     val bounds = sales.agg(max(col("date")).as("maxd"))
       .select(
-        date_trunc("quarter", col("maxd")).cast("date").as("q_curr"),
-        add_months(date_trunc("quarter", col("maxd")).cast("date"), -3).as("q_prev"))
+        trunc(col("maxd"), "quarter").as("q_curr"),
+        add_months(trunc(col("maxd"), "quarter"), -3).as("q_prev"))
     val inCurr = col("date") >= col("q_curr") && col("date") < add_months(col("q_curr"), 3)
     val inPrev = col("date") >= col("q_prev") && col("date") < col("q_curr")
     sales.crossJoin(broadcast(bounds))
       .filter(lower(col("region")) === region.toLowerCase)
       .agg(
-        (sum(when(inPrev, col("satisfaction")).cast(Num.Money)).cast("double")
-          / count(when(inPrev, col("satisfaction")))).as("avg_prev"),
-        (sum(when(inCurr, col("satisfaction")).cast(Num.Money)).cast("double")
-          / count(when(inCurr, col("satisfaction")))).as("avg_curr"))
+        Num.davg(when(inPrev, col("satisfaction"))).as("avg_prev"),
+        Num.davg(when(inCurr, col("satisfaction"))).as("avg_curr"))
       .select(
         initcap(lit(region.toLowerCase)).as("region"),
         col("avg_prev"), col("avg_curr"),
@@ -96,7 +94,7 @@ object Templates {
     * F3/C3/D10 (`api/main.py:1174-1208`).
     */
   def avgSatisfactionByRegionTwoQuarters(sales: DataFrame): DataFrame = {
-    val qtr = date_trunc("quarter", col("date")).cast("date")
+    val qtr = trunc(col("date"), "quarter")
     val top2 = sales.select(qtr.as("quarter_start")).distinct()
       .orderBy(col("quarter_start").desc).limit(2)
     sales

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.core.{Num, Q, Tables}
 import graft.intent.SalesView
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fixed KPI/dashboard query surface — SURVEY §2.L: the endpoints every
@@ -15,22 +16,34 @@ object Kpi {
     "CAST(SUM(CAST(satisfaction AS DECIMAL(18,2))) AS DOUBLE)/count(satisfaction)"
 
   /** The `/analytics/kpi` row over any frame with the sales view's columns:
-    * total sales, avg satisfaction, top region, top product. The top-1
-    * lookups are broadcast 1-row joins, not collected scalars.
+    * total sales, avg satisfaction, top region, top product.
+    *
+    * One aggregation pass: exact (region, product) cells, gathered into one
+    * partition (20 rows over the sales view), then per-region and per-product
+    * window totals and one global aggregate over the cells. Over a
+    * single-partition input that is one Spark job with no Exchange. The
+    * cells' decimal sums re-add exactly, so every value equals the
+    * row-level `Num.dsum`/`Num.davg`; the top-1s keep the
+    * `orderBy(v desc, name)` tie-break on the double total (nulls last,
+    * then the name, nulls first).
     */
   def kpi(sv: DataFrame): DataFrame = {
-    val totals = sv.agg(
-      Num.dsum(col("sales")).as("total_sales"),
-      Num.davg(col("satisfaction")).as("avg_satisfaction"))
-    val topRegion = sv.groupBy("region")
-      .agg(Num.dsum(col("sales")).as("v"))
-      .orderBy(col("v").desc, col("region")).limit(1)
-      .select(col("region").as("top_region"))
-    val topProduct = sv.groupBy("product")
-      .agg(Num.dsum(col("sales")).as("v"))
-      .orderBy(col("v").desc, col("product")).limit(1)
-      .select(col("product").as("top_product"))
-    totals.crossJoin(broadcast(topRegion)).crossJoin(broadcast(topProduct))
+    val cells = sv.groupBy("region", "product")
+      .agg(
+        Num.dsumDec(col("sales")).as("s"),
+        Num.dsumDec(col("satisfaction")).as("sat"),
+        count(col("satisfaction")).as("sat_n"))
+      .coalesce(1)
+    def total(k: String): Column =
+      sum(col("s")).over(Window.partitionBy(k)).cast("double")
+    def top(k: String, v: String): Column =
+      min_by(col(k), struct(col(v).isNull, -col(v), col(k)))
+    cells.select(col("*"), total("region").as("rv"), total("product").as("pv"))
+      .agg(
+        sum(col("s")).cast("double").as("total_sales"),
+        (sum(col("sat")).cast("double") / sum(col("sat_n"))).as("avg_satisfaction"),
+        top("region", "rv").as("top_region"),
+        top("product", "pv").as("top_product"))
   }
 
   /** L1 — `/analytics/kpi` (`api/main.py:665-688`): [[kpi]] over the
@@ -64,7 +77,7 @@ object Kpi {
       SalesView(s, d)
         .filter(col("region").isin("North", "South"))
         .groupBy(
-          date_trunc("month", col("date")).cast("date").as("month"),
+          trunc(col("date"), "month").as("month"),
           col("region"))
         .agg(
           Num.dsum(col("sales")).as("total_sales"),

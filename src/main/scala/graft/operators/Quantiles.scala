@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.{Num, Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -91,10 +91,21 @@ object Quantiles {
   }
 
   /** Which bin a value (or a whole collapsed cell, via its min) falls in:
-    * 1 + number of cuts strictly below it (cuts as collected literals).
+    * 1 + number of cuts strictly below it (cuts as collected literals; a
+    * NULL cut — no non-null value — counts for no value, as in the oracle).
     */
-  private def binOf(v: Column, cuts: Seq[Double]): Column =
+  private def binOf(v: Column, cuts: Seq[Column]): Column =
     cuts.map(c => when(v > c, 1).otherwise(0)).foldLeft(lit(1))(_ + _)
+
+  /** A collected nullable double as a DOUBLE literal. An empty input or an
+    * all-null measure leaves an order statistic NULL; it re-enters the
+    * plan as NULL, the oracle's answer, instead of a primitive read.
+    */
+  private def litD(x: Option[Double]): Column =
+    x.fold(lit(null).cast("double"))(lit(_))
+
+  private def doubleAt(r: Row, i: Int): Option[Double] =
+    if (r.isNullAt(i)) None else Some(r.getDouble(i))
 
   /** Equal-frequency decile binning of lineitem extended price: exact
     * type-1 decile cuts, then per-bin row counts, exact-decimal sums and
@@ -109,7 +120,7 @@ object Quantiles {
       val cells = decileCells(Tables.lineitem(s, d), "l_extendedprice")
         .localCheckpoint(true)
       val cutRow = decileCuts(cells).first()
-      val cuts = (0 until K).map(cutRow.getDouble)
+      val cuts = (0 until K).map(i => litD(doubleAt(cutRow, i)))
       cells
         .withColumn("bin", binOf(coalesce(col("bv"), col("vmin")), cuts))
         .groupBy("bin")
@@ -219,7 +230,9 @@ object Quantiles {
     rows.map { r =>
       val k = if (keys.isEmpty) "" else r.getString(0)
       val off = if (keys.isEmpty) 0 else 1
-      val pr = r.getSeq[Double](off + 1)
+      // no non-null value: no sketch, and n = 0 makes the bracket small,
+      // so its bounds are never read
+      val pr = Option(r.getSeq[Double](off + 1)).getOrElse(Seq(Double.NaN, Double.NaN))
       k -> Bracket(r.getLong(off), pr(0), pr(1))
     }.toMap
   }
@@ -227,9 +240,9 @@ object Quantiles {
   /** when-chain literal lookup over the collected group keys — the
     * literal replacement for a broadcast join on the group key.
     */
-  private def byKey(keyCol: Column, m: Map[String, Double]): Column =
+  private def byKey(keyCol: Column, m: Map[String, Option[Double]]): Column =
     m.toSeq.sortBy(_._1).foldLeft(lit(null).cast("double")) {
-      case (acc, (k, x)) => when(keyCol === k, lit(x)).otherwise(acc)
+      case (acc, (k, x)) => when(keyCol === k, litD(x)).otherwise(acc)
     }
 
   /** Bucket CASE for a 1-cut literal bracket: 0 below, 1 inside (identity
@@ -249,7 +262,7 @@ object Quantiles {
     * collected to scalars. With `keys` empty the group is global ("").
     */
   private def medianScalars(df: DataFrame, v: Column, keys: Seq[String],
-      br: Map[String, Bracket]): Map[String, Double] = {
+      br: Map[String, Bracket]): Map[String, Option[Double]] = {
     val keyCols = keys.map(col)
     val keyOf = if (keys.isEmpty) lit("") else col(keys.head)
     val bucket = br.toSeq.sortBy(_._1).foldLeft(lit(null).cast("int")) {
@@ -264,7 +277,7 @@ object Quantiles {
     val w =
       if (keys.isEmpty) Window.orderBy(col("bucket"), col("bv"))
       else Window.partitionBy(keyCols: _*).orderBy(col("bucket"), col("bv"))
-    val target = byKey(keyOf, br.map { case (k, b) => k -> b.target.toDouble })
+    val target = byKey(keyOf, br.map { case (k, b) => k -> Some(b.target.toDouble) })
     val ranked = cells.filter(col("bucket") <= 1)
       .withColumn("cum", sum(col("cnt")).over(w))
     val medAgg = min(when(col("cum") >= target, col("bv"))).as("m")
@@ -273,7 +286,7 @@ object Quantiles {
        else ranked.groupBy(keyCols: _*).agg(medAgg)).collect()
     rows.map { r =>
       val k = if (keys.isEmpty) "" else r.getString(0)
-      k -> r.getDouble(if (keys.isEmpty) 0 else 1)
+      k -> doubleAt(r, if (keys.isEmpty) 0 else 1)
     }.toMap
   }
 
@@ -358,7 +371,7 @@ object Quantiles {
         .select(col("l_returnflag"), x))
       val br = brackets(li, x, Nil)
       val med = medianScalars(li, x, Nil, br)("")
-      val dv = abs(x - lit(med))
+      val dv = abs(x - litD(med))
       val dbr = brackets(li, dv, Nil)
       // the dv bracket rides the x pass's n: dv is null iff x is null
       val cells = devCells(li, dv, Nil, dbr).localCheckpoint(true)
@@ -366,16 +379,16 @@ object Quantiles {
         .groupBy("bucket", "bv").agg(sum(col("cnt")).as("cnt"))
         .withColumn("cum",
           sum(col("cnt")).over(Window.orderBy(col("bucket"), col("bv"))))
-      val mad = madCells
+      val mad = doubleAt(madCells
         .agg(min(when(col("cum") >= dbr("").target, col("bv"))))
-        .first().getDouble(0)
+        .first(), 0)
       cells.groupBy("l_returnflag")
         .agg(
           sum(col("cnt")).as("n"),
-          sum(when(cellOutlier(lit(mad * 4.4478)), col("cnt")).otherwise(0L))
+          sum(when(cellOutlier(litD(mad.map(_ * 4.4478))), col("cnt")).otherwise(0L))
             .as("n_outliers"))
         .select(col("l_returnflag"), col("n"), col("n_outliers"),
-          lit(med).as("med"), lit(mad).as("mad"))
+          litD(med).as("med"), litD(mad).as("mad"))
     },
     Some("""
       WITH nn AS (SELECT count(*) AS n FROM lineitem),
@@ -430,11 +443,11 @@ object Quantiles {
           Window.partitionBy("l_returnflag").orderBy(col("bucket"), col("bv"))))
         .groupBy("l_returnflag")
         .agg(min(when(col("cum") >=
-          byKey(col("l_returnflag"), dbr.map { case (k, b) => k -> b.target.toDouble }),
+          byKey(col("l_returnflag"), dbr.map { case (k, b) => k -> Some(b.target.toDouble) }),
           col("bv"))).as("m"))
         .collect()
-      val mad = madRows.map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val thr = mad.map { case (k, m) => k -> m * 4.4478 }
+      val mad = madRows.map(r => r.getString(0) -> doubleAt(r, 1)).toMap
+      val thr = mad.map { case (k, m) => k -> m.map(_ * 4.4478) }
       cells.groupBy("l_returnflag")
         .agg(
           sum(col("cnt")).as("n"),

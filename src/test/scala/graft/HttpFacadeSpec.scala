@@ -361,6 +361,30 @@ class HttpFacadeSpec extends SparkSpec {
     assert(shuffle === 0L)
   }
 
+  test("a warm /analytics/kpi runs one Spark job, writes no shuffle and keeps its payload") {
+    val path = "/analytics/kpi"
+    assert(get(path)._1 === 200)
+    var body: Map[String, Any] = Map.empty
+    val (description, jobs, shuffle) = sparkWork {
+      val (c, b) = get(path)
+      assert(c === 200)
+      body = asObj(b)
+    }
+    assert(description === s"GET $path")
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+    // the payload of the earlier three-aggregate form: totals plus two
+    // sorted top-1 lookups, each over the rows
+    val sv = SalesView(spark, sf)
+    val totals = sv.agg(Num.dsum(col("sales")), Num.davg(col("satisfaction"))).head()
+    def top(k: String): String = sv.groupBy(k).agg(Num.dsum(col("sales")).as("v"))
+      .orderBy(col("v").desc, col(k)).head().getString(0)
+    val want = rendered(Array(org.apache.spark.sql.Row(
+      totals.get(0), totals.get(1), top("region"), top("product")))).head
+    assert(Seq("total_sales", "avg_satisfaction", "top_region", "top_product")
+      .map(body) === want)
+  }
+
   test("a warm forecast runs at most 4 Spark jobs") {
     val path = "/api/ts-forecast-v2?h=7&algo=seasonal7"
     assert(get(path)._1 === 200)

@@ -1,7 +1,8 @@
 package graft
 
+import graft.core.FixtureDirs
 import graft.operators.Quantiles
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Exactness and plan-shape proofs for the generalized bracket-refine
@@ -77,5 +78,40 @@ class QuantilesSpec extends SparkSpec {
     df.collect()
     val full = df.queryExecution.executedPlan.toString
     assert(!full.replace("approx_percentile", "").contains("percentile("))
+  }
+
+  // ---- degenerate inputs: the DuckDB answer, never an NPE ----------------
+
+  /** A lineitem fixture directory with the two columns the order
+    * statistics read: `n` rows spread over three return flags.
+    */
+  private def fixture(name: String, n: Int, price: Column): String = {
+    import spark.implicits._
+    val dir = FixtureDirs.perApp("target/quantiles-fixtures",
+      spark.sparkContext.applicationId) + s"/$name"
+    (0 until n).map(i => "ANR".substring(i % 3, i % 3 + 1)).toDF("l_returnflag")
+      .withColumn("l_extendedprice", price)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  private val orderStats =
+    Seq(Quantiles.q128QuantileBins, Quantiles.q156MadOutliers, Quantiles.q163GroupMadOutliers)
+
+  test("order statistics over an empty lineitem return no rows, as DuckDB does") {
+    val dir = fixture("empty", 0, lit(1.0))
+    for (q <- orderStats)
+      assert(q.plan(spark, dir).collect().isEmpty, q.name)
+  }
+
+  test("order statistics over an all-null measure keep the counts and return NULL statistics") {
+    val dir = fixture("all-null", 3000, lit(null).cast("double"))
+    // DuckDB 1.0 on the same file: one bin holding every row, NULL sums
+    assert(Quantiles.q128QuantileBins.plan(spark, dir).collect().toSeq ===
+      Seq(Row(1, 3000L, null, null, null)))
+    // per flag: every row counted, no outliers, NULL median and MAD
+    val flags = Seq("A", "N", "R").map(f => Row(f, 1000L, 0L, null, null))
+    for (q <- orderStats.tail)
+      assert(q.plan(spark, dir).collect().sortBy(_.getString(0)).toSeq === flags, q.name)
   }
 }
