@@ -56,14 +56,14 @@ object Bench {
 
   // Locale.ROOT: under a comma-decimal default locale (de_DE etc.) f"%.3f"
   // would emit "0,123" — invalid JSON on the one line that must parse.
-  def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  def r1(v: Double): String = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+  private def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def r1(v: Double): String = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
   /** Writes `bench/<file>` (relative to the working directory, the repo
     * root under `sbt run`). A failure is not fatal but warns on stderr: a
     * silently stale artifact would contradict the numbers on stdout.
     */
-  def writeArtifact(file: String, text: String): Unit =
+  private def writeArtifact(file: String, text: String): Unit =
     try {
       Files.createDirectories(Paths.get("bench"))
       Files.write(Paths.get("bench", file), text.getBytes("UTF-8"))
@@ -72,7 +72,7 @@ object Bench {
         "the committed artifact is now stale relative to stdout")
     }
 
-  def cpuModel: String =
+  private def cpuModel: String =
     try scala.io.Source.fromFile("/proc/cpuinfo").getLines()
       .collectFirst { case l if l.startsWith("model name") => l.split(":").last.trim }
       .getOrElse("unknown")

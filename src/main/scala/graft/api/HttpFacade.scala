@@ -1,9 +1,10 @@
 package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import graft.core.{Num, Tables}
+import graft.core.Tables
 import graft.forecast.Forecasters
 import graft.intent.{IntentParser, Router, SalesView, Templates}
+import graft.operators.Kpi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -336,23 +337,9 @@ final class HttpFacade(
     * its plan (its partition count would need the shuffle to run).
     */
   private lazy val daily: DataFrame = {
-    val d = sales.groupBy(col("date").as("d"))
-      .agg(Num.dsum(col("sales")).as("v"))
+    val d = Forecasters.dailySeries(sales)
     if (residents.contains(sales)) resident(d) else d
   }
-
-  /** `/bi/region-trends` generalized to a caller-supplied region list
-    * (`api/main.py:743-767`; q53 is the fixed North/South catalog form).
-    */
-  private def regionTrends(regions: Seq[String]): DataFrame =
-    sales.filter(col("region").isin(regions: _*))
-      .groupBy(
-        trunc(col("date"), "month").as("month"),
-        col("region"))
-      .agg(
-        Num.dsum(col("sales")).as("sales"),
-        Num.davg(col("satisfaction")).as("satisfaction"))
-      .orderBy(col("month"), col("region"))
 
   // ---- routes ------------------------------------------------------------
 
@@ -382,7 +369,7 @@ final class HttpFacade(
     // `api/main.py:665-688` — the q50 plan over the facade's sales: one
     // aggregation pass, one job over the resident input
     handle("/analytics/kpi") { _ =>
-      val row = graft.operators.Kpi.kpi(sales).collect().head
+      val row = Kpi.kpi(sales).collect().head
       200 -> obj(
         "total_sales" -> row.getAs[Any]("total_sales"),
         "avg_satisfaction" -> row.getAs[Any]("avg_satisfaction"),
@@ -429,7 +416,7 @@ final class HttpFacade(
           "columns" -> arr(Seq("month", "region", "sales", "satisfaction")),
           "source_table" -> "sales_v")
       else {
-        val t = tableOf(regionTrends(regions))
+        val t = tableOf(Kpi.regionTrends(sales, regions))
         200 -> obj(
           "regions" -> arr(regions),
           "rows" -> rowsJson(t),
@@ -553,12 +540,7 @@ final class HttpFacade(
         } else {
           val (context, cites) =
             Rag.retrieve(spark, documents, embeddings, q, k, embed)
-          val answer = chat(
-            s"""You are a concise BI analyst. Use ONLY the provided context.
-               |QUESTION: $q
-               |CONTEXT:
-               |$context
-               |Answer in <=120 words.""".stripMargin)
+          val answer = chat(LlmPorts.analystPrompt(q, context))
           200 -> obj(
             "answer" -> answer,
             "citations" -> arr(cites.map(c =>

@@ -32,17 +32,22 @@ object LlmPorts {
        |  CAST(SUM(CAST(sales AS DECIMAL(18,2))) AS DOUBLE) AS total
        |FROM sales_data GROUP BY region ORDER BY total DESC""".stripMargin
 
+  /** The chat prompt that answers `question` from `context` alone
+    * (`api/main.py:1252-1257`). The margin strip runs after the context is
+    * spliced in, as it always has: a context line that starts with `|`
+    * (a markdown table row) loses that bar.
+    */
+  def analystPrompt(question: String, context: String): String =
+    s"""You are a concise BI analyst. Use ONLY the provided context.
+       |QUESTION: $question
+       |CONTEXT:
+       |$context
+       |Answer in <=120 words.""".stripMargin
+
   /** J7 — table → summary: markdown-render the preview and summarize
     * through the chat port (`api/main.py:1234-1269`).
     */
   def summarizeTable(question: String, table: ResultTable,
-      chat: ChatFn = fakeChat): String = {
-    val md = table.toMarkdown(maxRows = 8)
-    chat(
-      s"""You are a concise BI analyst. Use ONLY the provided context.
-         |QUESTION: $question
-         |CONTEXT:
-         |$md
-         |Answer in <=120 words.""".stripMargin)
-  }
+      chat: ChatFn = fakeChat): String =
+    chat(analystPrompt(question, table.toMarkdown(maxRows = 8)))
 }

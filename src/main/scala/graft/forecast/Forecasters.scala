@@ -11,114 +11,89 @@ import org.apache.spark.sql.functions._
   * `window` values), seasonal7 (recursive repeat of the value 7 days back).
   *
   * The reference materializes the series into a Python list and loops; here
-  * each model is a CLOSED-FORM DataFrame plan: anchors (last date, last-k
-  * values, slope) come from rank-window expressions, forecast rows from
-  * `sequence`+`explode` date generation — fully distributed, no
-  * driver-side recurrence. seasonal7's buffer recurrence collapses to
-  * f(i) = v[len-7 + ((i-1) mod 7)] (the buffer only ever reads values ≥7
-  * back, so appended forecasts tile the last 7 history values cyclically);
-  * ForecastSpec proves plan ≡ reference recurrence property-style.
+  * each model is ONE CLOSED-FORM keyed DataFrame plan over (k, d, v):
+  * anchors (last date, last-k values, slope) come from rank windows
+  * partitioned by key, forecast rows from `sequence`+`explode` date
+  * generation — fully distributed, no driver-side recurrence. A single
+  * series is the one key of the same plan. seasonal7's buffer recurrence
+  * collapses to f(i) = v[len-7 + ((i-1) mod 7)] (the buffer only ever
+  * reads values ≥7 back, so appended forecasts tile the last 7 history
+  * values cyclically); ForecastSpec proves plan ≡ reference recurrence
+  * property-style.
   *
-  * Input contract: `daily` = (d DATE, v DOUBLE) with one row per date,
-  * values 2-decimal exact (from Num.dsum) so re-aggregation stays
+  * Input contract: `daily` = (d DATE, v DOUBLE) with one row per date (per
+  * key), values 2-decimal exact (from Num.dsum) so re-aggregation stays
   * engine-exact. Horizon clamps to [1,365], window to [1,len]
-  * (`api/main.py:877-878`).
+  * (`api/main.py:877-878`). Below a model's minimum history (seasonal7 7
+  * points, drift 2, ma7 1) a series gets no rows; a caller that needs the
+  * reference's 400 error calls [[requirePoints]] first.
   */
 object Forecasters {
 
   private def clampH(h: Int): Int = math.max(1, math.min(h, 365))
 
-  private def ranked(daily: DataFrame): DataFrame =
-    daily.withColumn("r", row_number().over(Window.orderBy(col("d").desc)))
+  /** The `(d, v)` daily series of a sales-shaped frame: one row per date,
+    * v = the date's exact `Num.dsum` of sales. The input every
+    * single-series forecaster takes.
+    */
+  def dailySeries(sales: DataFrame): DataFrame =
+    sales.groupBy(col("date").as("d")).agg(Num.dsum(col("sales")).as("v"))
 
-  /** (last_date, h) → one row per forecast day with its index i ∈ [1,h]. */
-  private def futureDays(daily: DataFrame, h: Int): DataFrame =
-    daily.agg(max(col("d")).as("last_date"))
-      .select(col("last_date"), explode(sequence(lit(1), lit(h))).as("i"))
+  /** A single series forecast as the one key of a keyed forecaster. */
+  private def single(daily: DataFrame)(keyed: DataFrame => DataFrame): DataFrame =
+    keyed(daily.withColumn("k", lit(0))).drop("k")
 
   /** I1 — ma7_baseline: flat forecast = mean of last `window` values
-    * (`api/main.py:907-914`). The mean runs through exact decimal so the
-    * oracle derives the identical double.
+    * (`api/main.py:907-914`); [[ma7ByKey]] over one key.
     */
-  def ma7Baseline(daily: DataFrame, h0: Int, window0: Int): DataFrame = {
-    val h = clampH(h0)
-    val window = math.max(1, window0) // reference clamp `api/main.py:877-878`
-    val base = ranked(daily).filter(col("r") <= window)
-      .agg((Num.dsum(col("v")) / count(lit(1))).as("base"))
-    futureDays(daily, h).crossJoin(broadcast(base))
-      .select(
-        date_add(col("last_date"), col("i")).as("date"),
-        col("base").as("sales_hat"))
-  }
+  def ma7Baseline(daily: DataFrame, h0: Int, window0: Int): DataFrame =
+    single(daily)(ma7ByKey(_, h0, window0))
 
-  /** I3 — drift: slope = (y_T − y_{T−w+1})/T with w = min(window, len) and
-    * T = w−1 if w>1 else 1 (`api/main.py:893-905`, window clamp `:877-878`).
-    * Requires ≥2 points.
+  /** I3 — drift: linear extrapolation from the last `window` values
+    * (`api/main.py:893-905`); [[driftByKey]] over one key. Fewer than 2
+    * points give no rows.
     */
-  def drift(daily: DataFrame, h0: Int, window0: Int): DataFrame = {
-    val h = clampH(h0)
-    val window = math.max(1, window0) // reference clamp `api/main.py:877-878`
-    val anchors = ranked(daily)
-      .withColumn("weff", least(lit(window), count(lit(1)).over(Window.partitionBy())))
-      .filter(col("r") === 1 || col("r") === col("weff"))
-      .agg(
-        max(when(col("r") === 1, col("v"))).as("yT"),
-        max(when(col("r") === col("weff"), col("v"))).as("y0"),
-        max(col("weff")).as("weff"))
-      .select(col("yT"),
-        ((col("yT") - col("y0")) / greatest(col("weff") - 1, lit(1))).as("slope"))
-    futureDays(daily, h).crossJoin(broadcast(anchors))
-      .select(
-        date_add(col("last_date"), col("i")).as("date"),
-        (col("yT") + col("slope") * col("i")).as("sales_hat"))
-  }
+  def drift(daily: DataFrame, h0: Int, window0: Int): DataFrame =
+    single(daily)(driftByKey(_, h0, window0))
 
-  /** I2 — seasonal7 closed form: f(i) = value at rank 7 − ((i−1) mod 7)
-    * from the end (`api/main.py:883-891`). Requires ≥7 points — enforced by
-    * the equi-join (an i with no matching rank would drop, so the caller
-    * must validate; see [[requireSeasonalPrecondition]]).
+  /** I2 — seasonal7: the value 7 days back, repeated
+    * (`api/main.py:883-891`); [[seasonal7ByKey]] over one key. Fewer than
+    * 7 points give no rows.
     */
-  def seasonal7(daily: DataFrame, h0: Int): DataFrame = {
-    val h = clampH(h0)
-    val last7 = ranked(daily).filter(col("r") <= 7)
-      .select(col("r"), col("v"))
-    futureDays(daily, h)
-      .withColumn("rk", lit(7) - (col("i") - 1) % 7)
-      .join(broadcast(last7), col("rk") === col("r"))
-      .select(
-        date_add(col("last_date"), col("i")).as("date"),
-        col("v").as("sales_hat"))
-  }
+  def seasonal7(daily: DataFrame, h0: Int): DataFrame =
+    single(daily)(seasonal7ByKey(_, h0))
 
   /** Per-key seasonal7 — the scale path (SURVEY §2.N): forecasts for every
-    * key of a keyed daily series in ONE plan. Rank windows partition by
-    * key, future days explode per key from each key's own last date, and
-    * the tiling join carries the key — millions of independent series cost
-    * one shuffle on the key, no driver loop, no per-key job.
+    * key of a keyed daily series in ONE plan, no driver loop, no per-key
+    * job. Closed form f(i) = value at rank 7 − ((i−1) mod 7) from the end:
+    * one aggregate per key gathers the last 7 values by rank, and each
+    * forecast day reads its element.
     * Input: (k, d DATE, v DOUBLE); keys with <7 points produce no rows
-    * (the rank equi-join drops them — the reference's precondition).
+    * (the reference's precondition).
     */
   def seasonal7ByKey(daily: DataFrame, h0: Int): DataFrame = {
     val h = clampH(h0)
-    val ranked = daily.withColumn("r",
-      row_number().over(Window.partitionBy("k").orderBy(col("d").desc)))
-    val last7 = ranked.filter(col("r") <= 7).select(col("k"), col("r"), col("v"))
-    val eligible = ranked.groupBy("k")
-      .agg(max(col("d")).as("last_date"), count(lit(1)).as("n"))
-      .filter(col("n") >= 7)
-    eligible
-      .select(col("k"), col("last_date"),
+    daily
+      .withColumn("r",
+        row_number().over(Window.partitionBy("k").orderBy(col("d").desc)))
+      .filter(col("r") <= 7)
+      .groupBy("k")
+      .agg(
+        max(col("d")).as("last_date"),
+        count(lit(1)).as("n"), // min(n_k, 7)
+        array((1 to 7).map(j => max(when(col("r") === j, col("v")))): _*).as("vs"))
+      .filter(col("n") === 7)
+      .select(col("k"), col("last_date"), col("vs"),
         explode(sequence(lit(1), lit(h))).as("i"))
-      .withColumn("rk", lit(7) - (col("i") - 1) % 7)
-      .join(last7, Seq("k")).filter(col("rk") === col("r"))
       .select(col("k"),
         date_add(col("last_date"), col("i")).as("date"),
-        col("v").as("sales_hat"))
+        element_at(col("vs"), lit(7) - (col("i") - 1) % 7).as("sales_hat"))
   }
 
-  /** Per-key ma7_baseline — keyed variant of [[ma7Baseline]], completing
-    * the per-key family next to [[seasonal7ByKey]]: every key's flat
+  /** Per-key ma7_baseline: every key's flat mean-of-last-`window`
     * forecast in ONE plan (rank window partitioned by key, one shuffle).
+    * The mean runs through exact decimal so the oracle derives the
+    * identical double.
     * Per-key window clamps naturally: `r <= window` takes min(window, n_k)
     * rows. last_date rides along as the r=1 date — no second aggregate.
     */
@@ -139,9 +114,9 @@ object Forecasters {
         col("base").as("sales_hat"))
   }
 
-  /** Per-key drift — keyed variant of [[drift]]. The reference clamps the
-    * window to the series length (`api/main.py:877-878`): per key,
-    * w_eff = min(window, n_k), slope = (y_T − y_{T−w_eff+1})/T with
+  /** Per-key drift: every key's linear extrapolation in ONE plan. The
+    * reference clamps the window to the series length
+    * (`api/main.py:877-878`): per key, w_eff = min(window, n_k), slope = (y_T − y_{T−w_eff+1})/T with
     * T = w_eff−1 if w_eff>1 else 1 (`api/main.py:899`) — so window=1 on a
     * key with history yields a flat forecast (slope 0), not a dropped key.
     * Keys with <2 points produce no rows (the reference's precondition).

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
 object ForecastQueries {
 
   private def daily(s: SparkSession, d: String): DataFrame =
-    SalesView(s, d)
-      .groupBy(col("date").as("d"))
-      .agg(Num.dsum(col("sales")).as("v"))
+    Forecasters.dailySeries(SalesView(s, d))
 
   private val sqlDaily: String =
     s"""${SalesView.sqlCte},
@@ -84,13 +82,9 @@ object ForecastQueries {
     */
   val q64ForecastByRegion = Q(
     "q64_forecast_by_region",
-    (s, d) => {
-      val keyed = SalesView(s, d)
-        .groupBy(col("region").as("k"), col("date").as("d"))
-        .agg(Num.dsum(col("sales")).as("v"))
-      Forecasters.seasonal7ByKey(keyed, h0 = 10)
-        .withColumnRenamed("k", "region")
-    },
+    (s, d) =>
+      Forecasters.seasonal7ByKey(keyedDaily(s, d), h0 = 10)
+        .withColumnRenamed("k", "region"),
     Some(s"""
       WITH ${SalesView.sqlCte},
       daily AS (

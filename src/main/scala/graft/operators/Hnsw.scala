@@ -665,23 +665,14 @@ object Hnsw {
     s.createDataset(rdd)
   }
 
-  /** Skip the freshness scan and trust an existing index directory —
-    * the production stance at corpus scale, where the source fingerprint
-    * (one narrow column agg over ALL vectors) is a real per-query scan
-    * and index↔source consistency is owned by the ingest pipeline's
-    * explicit versioning, not re-derived per search. Default OFF: the
-    * gates re-verify so a stale tmp dir can never fake a green hash.
-    */
-  val TrustIndexConf = "graft.hnsw.trustIndex"
-
   /** Index paths already verified (or built) by THIS application, so the
     * per-call freshness scan runs once per JVM, not once per query. Sound
     * under the same assumption Spark's own FileIndex caching makes when a
     * DataFrame is reused: source files are immutable for the life of the
     * application. A source mutated mid-application is re-verified on the
-    * next application start (or never, under [[TrustIndexConf]]). The
-    * practical effect is on repeated-query latency: a warm search pays
-    * ZERO freshness jobs instead of two driver round trips per query.
+    * next application start. The practical effect is on repeated-query
+    * latency: a warm search pays ZERO freshness jobs instead of two driver
+    * round trips per query.
     */
   private val verifiedIndexes =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -691,18 +682,12 @@ object Hnsw {
     * amortization path. The check costs one narrow agg on each side
     * (source: vec_id column only, pruned at the scan; index: parquet
     * row-group stats), runs once per application per path (see
-    * [[verifiedIndexes]]); at 100 TB set [[TrustIndexConf]] and version
-    * indexes explicitly instead of rescanning the source at all.
+    * [[verifiedIndexes]]).
     */
   private def ensureIndex(s: SparkSession, d: String, variant: String,
       src: org.apache.spark.sql.Dataset[VecRow]): String = {
     val path = indexPath(s, d, variant)
     if (verifiedIndexes.contains(path)) return path
-    if (s.conf.get(TrustIndexConf, "false").toBoolean &&
-        scala.util.Try(s.read.parquet(path).schema).isSuccess) {
-      verifiedIndexes.add(path)
-      return path
-    }
     val want = fingerprint(src.toDF())
     val have =
       try fingerprint(s.read.parquet(path))
@@ -1227,26 +1212,6 @@ object Hnsw {
       .sortBy { case (cc, c) => (-cc, c) }
       .map(_._2).toArray
 
-  /** Search beam for the clustered gate. A cell of one cluster is a FLAT
-    * similarity landscape — every member is cos ≈ 0.99 from every other,
-    * the top-10 differ from the field only in the 4th..6th decimal — and
-    * under round-12's plain top-M neighbor selection the level-0 graph
-    * degraded toward near-duplicate cliques there, which EfClustered=400
-    * papered over by beam width. The Algorithm-4 diversity heuristic
-    * ([[ShardGraph.selectDiverse]]) is the structural fix and landed in
-    * round 12; this beam was then RE-TUNED post-heuristic (VERDICT r12
-    * #3: running both the workaround and the fix pays twice). Measured at
-    * sf1 via [[graft.HnswTune]] (bench/hnsw_efclustered_tune_sf1.json):
-    * post-heuristic global tie-tolerant recall over the 50 probes is
-    * 1.000 — min AND mean — at ef 96, 192 and 400 alike, i.e. the
-    * heuristic alone carries the gate and the widened beam was pure
-    * double-payment. Per the cheapest-clearing rule the beam returns to
-    * 96, the same width as the isotropic family's EfS — no special case
-    * left. Conf-overridable for tuning runs, never set by library code.
-    */
-  val EfClusteredConf = "graft.hnsw.efClustered"
-  val EfClusteredDefault = 96
-
   final case class ClusteredHit(query_id: Long, vec_id: Long, sim: Double,
       exact: Boolean, in_probed: Boolean)
 
@@ -1261,9 +1226,6 @@ object Hnsw {
   private[graft] def clusteredHits(s: SparkSession, d: String)
       : org.apache.spark.sql.Dataset[ClusteredHit] = {
     import s.implicits._
-    // read once on the driver at plan time; the Int is captured in the
-    // flatMapGroups closure (executors never read conf)
-    val ef = s.conf.get(EfClusteredConf, EfClusteredDefault.toString).toInt
     val ids = Tables.embeddings(s, d).select(col("vec_id")).as[Long]
     // probe sets: NQueries × RoutedProbe — bounded, computed driver-side
     // from the same pure closed form the executors use
@@ -1309,8 +1271,12 @@ object Hnsw {
       rows.foreach { case (id, v) => g.insert(id, v) }
       bq.value.iterator.flatMap { case (qid, qv, probes) =>
         val probed = probes.contains(cell)
+        // the isotropic beam: with the diversity heuristic
+        // (ShardGraph.selectDiverse) recall over the 50 probes was 1.000 at
+        // ef 96, 192 and 400 alike at sf1
+        // (bench/hnsw_efclustered_tune_sf1.json), so no wider beam
         val hnsw =
-          if (probed) g.search(qv, K, ef).map { case (id, sm) =>
+          if (probed) g.search(qv, K, EfS).map { case (id, sm) =>
             ClusteredHit(qid, id, sm, exact = false, in_probed = true) }
           else Seq.empty
         // rounded-key pool: shares the global window's total order, so
@@ -1332,8 +1298,7 @@ object Hnsw {
     * (score-based) recall definition documented at the `rec` frame below.
     */
   /** (exact global top-K frame, per-query recall frame) from a
-    * checkpointed [[clusteredHits]] frame — shared by q181 and the
-    * [[graft.HnswTune]] beam-tuning main.
+    * checkpointed [[clusteredHits]] frame.
     *
     * GLOBAL recall, TIE-TOLERANT (score-based recall@K): a returned item
     * counts as found when its 6dp similarity is >= the K-th exact item's
@@ -1343,7 +1308,7 @@ object Hnsw {
     * promise and which says nothing about search quality (an equal-sim
     * neighbor IS an equally good answer).
     */
-  private[graft] def clusteredExactAndRecall(hits: DataFrame)
+  private def clusteredExactAndRecall(hits: DataFrame)
       : (DataFrame, DataFrame) = {
     // One window pass ranks both hit kinds (partition on (exact,
     // query_id)), one grouped pass computes the tie-tolerant recall: the

@@ -68,21 +68,29 @@ object Kpi {
     """),
   )
 
-  /** L4 — `/bi/region-trends` (`api/main.py:743-767`): monthly SUM(sales) +
-    * AVG(satisfaction) for an IN-list of regions (B4+D10).
+  /** The `/bi/region-trends` table (`api/main.py:743-767`) over any frame
+    * with the sales view's columns: monthly SUM(sales) + AVG(satisfaction)
+    * per region of an IN-list (B4+D10), as (month, region, sales,
+    * satisfaction) ordered by month, region.
+    */
+  def regionTrends(sv: DataFrame, regions: Seq[String]): DataFrame =
+    sv.filter(col("region").isin(regions: _*))
+      .groupBy(
+        trunc(col("date"), "month").as("month"),
+        col("region"))
+      .agg(
+        Num.dsum(col("sales")).as("sales"),
+        Num.davg(col("satisfaction")).as("satisfaction"))
+      .orderBy(col("month"), col("region"))
+
+  /** L4 — [[regionTrends]] for North and South over the sales view read
+    * from parquet.
     */
   val q53RegionTrends = Q(
     "q53_region_trends",
     (s, d) =>
-      SalesView(s, d)
-        .filter(col("region").isin("North", "South"))
-        .groupBy(
-          trunc(col("date"), "month").as("month"),
-          col("region"))
-        .agg(
-          Num.dsum(col("sales")).as("total_sales"),
-          Num.davg(col("satisfaction")).as("avg_satisfaction"))
-        .orderBy(col("month"), col("region")),
+      regionTrends(SalesView(s, d), Seq("North", "South"))
+        .toDF("month", "region", "total_sales", "avg_satisfaction"),
     Some(s"""
       WITH ${SalesView.sqlCte}
       SELECT CAST(date_trunc('month', date) AS DATE) AS month, region,

@@ -41,6 +41,7 @@ class ForecastSpec extends SparkSpec {
       val vs = series(n)
       val got = planValues(Forecasters.drift(mkDaily(vs), h, w))
       val want = Forecasters.referenceForecast(vs, h, "drift", w)
+      assert(got.length === h, s"n=$n h=$h w=$w")
       got.zip(want).foreach { case (g, e) =>
         assert(math.abs(g - e) < 1e-9, s"n=$n h=$h w=$w: $g vs $e")
       }
@@ -85,17 +86,20 @@ class ForecastSpec extends SparkSpec {
 
   test("per-key seasonal7: each key forecasts from its own series; short keys drop") {
     import spark.implicits._
-    val a = series(10); val b = series(8); val short = series(5)
+    val a = series(10); val b = series(8); val seven = series(7)
+    val six = series(6); val short = series(5)
     val mk = (k: String, vs: Seq[Double]) => vs.zipWithIndex.map { case (v, i) =>
       (k, Date.valueOf(java.time.LocalDate.of(2024, 3, 1).plusDays(i)), v)
     }
-    val keyed = (mk("A", a) ++ mk("B", b) ++ mk("C", short)).toDF("k", "d", "v")
+    val keyed = (mk("A", a) ++ mk("B", b) ++ mk("C", short) ++ mk("D", seven) ++
+      mk("E", six)).toDF("k", "d", "v")
     val got = Forecasters.seasonal7ByKey(keyed, 9).collect()
       .groupBy(_.getString(0))
       .view.mapValues(_.sortBy(_.getDate(1).getTime).map(_.getDouble(2)).toSeq).toMap
-    assert(got.keySet === Set("A", "B")) // C has <7 points
+    assert(got.keySet === Set("A", "B", "D")) // C and E have <7 points
     assert(got("A") === Forecasters.referenceForecast(a, 9, "seasonal7", 7))
     assert(got("B") === Forecasters.referenceForecast(b, 9, "seasonal7", 7))
+    assert(got("D") === Forecasters.referenceForecast(seven, 9, "seasonal7", 7))
   }
 
   test("per-key drift/ma7 == reference per key; window=1 flat; 1-point keys drop from drift only") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{AskAi, HttpFacade, LlmPorts, MiniJson}
 import graft.core.Num
+import graft.forecast.Forecasters
 import graft.intent.{IntentParser, SalesView}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
@@ -385,11 +386,37 @@ class HttpFacadeSpec extends SparkSpec {
       .map(body) === want)
   }
 
-  test("a warm forecast runs at most 4 Spark jobs") {
-    val path = "/api/ts-forecast-v2?h=7&algo=seasonal7"
-    assert(get(path)._1 === 200)
-    val (_, jobs, _) = sparkWork(assert(get(path)._1 === 200))
-    assert(jobs <= 4)
+  private val algos = Seq("ma7_baseline", "drift", "seasonal7")
+
+  test("a warm forecast runs at most 3 Spark jobs and writes no shuffle, for every algo") {
+    // the history-length count, the history preview and the forecast
+    for (algo <- algos) {
+      val path = s"/api/ts-forecast-v2?h=7&algo=$algo"
+      assert(get(path)._1 === 200, algo)
+      val (_, jobs, shuffle) = sparkWork(assert(get(path)._1 === 200, algo))
+      assert(jobs <= 3, algo)
+      assert(shuffle === 0L, algo)
+    }
+  }
+
+  test("each forecast equals the reference recurrence over /ts/sales-daily") {
+    val daily = rowsOf(asObj(get("/ts/sales-daily")._2)("rows"))
+    val values = daily.map(_(1).asInstanceOf[Double])
+    val lastDate = java.time.LocalDate.parse(daily.last.head.asInstanceOf[String])
+    for (algo <- algos; (h, window) <- Seq((9, 7), (16, 30))) {
+      val (c, b) = get(s"/api/ts-forecast-v2?h=$h&algo=$algo&window=$window")
+      assert(c === 200, algo)
+      val fc = rowsOf(asObj(b)("forecast"))
+      assert(fc.map(r => java.time.LocalDate.parse(r.head.asInstanceOf[String])) ===
+        (1 to h).map(i => lastDate.plusDays(i.toLong)), s"$algo h=$h")
+      val got = fc.map(_(1).asInstanceOf[Double])
+      val want = Forecasters.referenceForecast(values, h, algo, window)
+      assert(got.length === want.length, s"$algo h=$h")
+      got.zip(want).foreach { case (g, e) =>
+        assert(math.abs(g - e) <= 1e-9 * math.max(1.0, math.abs(e)),
+          s"$algo h=$h window=$window: $g vs $e")
+      }
+    }
   }
 
   test("the facade answers the golden data prompts and the daily series as a plain sales view does") {

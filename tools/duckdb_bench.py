@@ -24,6 +24,10 @@ headline}}) that Bench.scala embeds and bench_compare-style consumers read,
 and adds "band" ({name: {min, med, runs, stalled?}}), "stall_reruns" and
 "burn_ms" for forensics.
 
+SPARK_GRAFT_ONLY=q31,q34 times only those queries, with graft.Bench's
+semantics (SparkEntry.select): comma-separated exact qNN prefixes; a prefix
+that matches no query exits non-zero and names itself.
+
 Usage: python3 tools/duckdb_bench.py /root/testdata/sf0.1 /tmp/verify_sf01
 Writes the JSON record to stdout.
 """
@@ -68,6 +72,14 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+only = os.environ.get("SPARK_GRAFT_ONLY")
+if only is not None:
+    keys = {k.strip() for k in only.split(",") if k.strip()}
+    unknown = keys - {n.split("_")[0] for n in oracle}
+    if unknown:
+        sys.exit("SPARK_GRAFT_ONLY entries matched no query: "
+                 + ",".join(sorted(unknown)))
+    oracle = {n: q for n, q in oracle.items() if n.split("_")[0] in keys}
 
 # python-side burn is ~20-40x slower than the JVM's per iteration; it is a
 # HOST fingerprint, not a cross-runtime comparable — record it as burn_ms_py
