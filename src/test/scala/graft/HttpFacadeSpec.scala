@@ -386,6 +386,13 @@ class HttpFacadeSpec extends SparkSpec {
       .map(body) === want)
   }
 
+  test("a warm forecast runs at most 4 Spark jobs") {
+    val path = "/api/ts-forecast-v2?h=7&algo=seasonal7"
+    assert(get(path)._1 === 200)
+    val (_, jobs, _) = sparkWork(assert(get(path)._1 === 200))
+    assert(jobs <= 4)
+  }
+
   private val algos = Seq("ma7_baseline", "drift", "seasonal7")
 
   test("a warm forecast runs at most 3 Spark jobs and writes no shuffle, for every algo") {
