@@ -1,28 +1,31 @@
 package graft.operators
 
 import graft.core.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** HNSW-class incremental graph ANN (VERDICT r9 #8 — the reference's only
   * physical index is an HNSW cosine collection; ref: api/main.py:149-157,
   * etl/index_docs.py:60).
   *
   * Spark-first shape: the index is SHARDED — vectors hash to
-  * `vec_id % Shards` groups, each shard builds an independent in-memory
-  * HNSW graph inside one `flatMapGroups` task, and a query searches every
-  * shard and merges top-k (exact merge: per-shard results are globally
-  * merged by similarity, so the only recall loss is per-shard search
-  * misses). At 100 TB the shard count scales with the corpus and a query
-  * fans out one log-size search per shard; routed probing below full
-  * fan-out is the IVF family's territory (q42/q112), which this
-  * complements, not replaces. Incremental ingest is the point of the
+  * `vec_id % IsoShards` groups, each shard builds an independent
+  * in-memory HNSW graph in one task of the [[perShard]] RDD exchange, and
+  * a query searches every shard and merges top-k (exact merge: per-shard
+  * results are globally merged by similarity, so the only recall loss is
+  * per-shard search misses). At 100 TB the shard count scales with the
+  * corpus and a query fans out one log-size search per shard; routed
+  * probing below full fan-out is the IVF family's territory (q42/q112),
+  * which this complements, not replaces. Incremental ingest is the point of the
   * graph structure: a new batch inserts into the EXISTING shard graphs
   * (old nodes are never re-indexed) — q174 gates exactly that path.
   *
   * Everything is deterministic and partition-invariant, the repo's
   * gate-ability bar: insertion order is ascending vec_id within a shard
-  * (groupByKey delivers a logical group, sorted before building), node
+  * ([[buildShard]] sorts whatever order the exchange delivers), node
   * levels derive from the 60-bit md5 key (`level = max L ≤ 8 with
   * hash60("hnsw-"||id) % 4^L == 0`, an integer-only geometric(1/4) rule
   * the DuckDB oracle mirrors exactly — no ln/floor libm edge), and every
@@ -31,6 +34,13 @@ import org.apache.spark.sql.functions._
   * an exact per-shard scan) holds with margin; HnswSpec measures it and
   * the q173/q174 oracles pin it the q165 way (the oracle states the
   * contract, the engine's violation flips the hashed counts).
+  *
+  * Every search gate runs ONE pipeline, the partition-local top-k pools
+  * merged under one global total order (REPOSE's shape): [[perShard]]
+  * builds each shard's graph, [[emitHits]] writes one [[Hit]] row per
+  * HNSW hit and per exact-pool member, and [[differentialOf]] ranks both
+  * kinds under one total order and scores recall. The families differ only
+  * in how vectors are keyed to shards and which shards a query probes.
   */
 object Hnsw {
 
@@ -42,11 +52,11 @@ object Hnsw {
     * count, which its DuckDB oracle mirrors (`LIMIT $Shards`), so it
     * cannot move — but the isotropic shard count is a pure parallelism/
     * memory knob with shard-count-independent outputs (each graph's exact
-    * top-(K+6) pool is merged globally, and any global top-K member is
-    * inside its own shard's top-K for EVERY sharding). Build cost per
-    * shard is superlinear in shard size (each insert beam-searches the
-    * growing graph), so more shards cut both the build stage's wall and
-    * its total CPU; all seven gates re-verified hash-green at sf0.001 and
+    * top-K pool is merged globally under the pool's own total order, so
+    * any global top-K member is inside its own shard's top-K for EVERY
+    * sharding). Build cost per shard is superlinear in shard size (each
+    * insert beam-searches the growing graph), so more shards cut both the
+    * build stage's wall and its total CPU; all seven gates re-verified hash-green at sf0.001 and
     * sf0.01 under 16. At 100 TB this derives from corpus size / executor
     * memory, not a constant; 16 is the bench-scale setting that keeps
     * every graph oracle-gated.
@@ -87,9 +97,15 @@ object Hnsw {
   }
 
   final case class VecRow(vec_id: Long, embedding: Array[Float])
-  final case class NodeRow(shard: Int, vec_id: Long, level: Int, deg_ok: Boolean)
+
+  /** One search result of one shard graph for one probe: an HNSW hit
+    * (`exact = false`, only from probed shards) or an exact-pool member
+    * (`exact = true`, from every shard). `in_probed` says whether the
+    * query probed this shard; every row carries its shard's node count, so
+    * n_indexed is a fact about the SAME graphs the search ran on.
+    */
   final case class Hit(query_id: Long, vec_id: Long, sim: Double,
-      exact: Boolean, shard: Int, n_shard_nodes: Long)
+      exact: Boolean, in_probed: Boolean, shard: Int, n_shard_nodes: Long)
 
   /** One persisted index node (VERDICT r13 #1 — the reference's only
     * physical index is PERSISTENT: Chroma's PersistentClient survives the
@@ -297,29 +313,21 @@ object Hnsw {
         .take(k).map { case (s, i) => (ids(i), s) }.toSeq
     }
 
-    /** Exact top-k by full shard scan — the in-plan recall baseline AND the
-      * differentially-oracled exact path (VERDICT r10 #5): the global merge
-      * of these rows is hash-compared against DuckDB's own brute-force
-      * cosine top-k, so a similarity bug shared by search and this scan
-      * can no longer hide.
+    /** Exact top-k by full shard scan under the 6dp-ROUNDED (sim DESC,
+      * id ASC) key, returning rounded sims — the in-plan recall baseline
+      * AND the differentially-oracled exact path (VERDICT r10 #5): the
+      * global merge of these rows is hash-compared against DuckDB's own
+      * brute-force cosine top-k, so a similarity bug shared by search and
+      * this scan can no longer hide. The key is the SAME total order the
+      * global window and every DuckDB oracle rank by. A pool cut by RAW sim
+      * can exclude a smaller-id vector that the rounded global ranking
+      * places above an included one whenever more than k candidates tie
+      * inside one rounded band, and no fixed margin past k bounds such a
+      * band (ADVICE r12); with the pool and the window sharing one total
+      * order, every member of the global top-K is by construction inside
+      * its own shard's top-K, so a pool of K suffices.
       */
     def exactTopK(q: Array[Float], k: Int): Seq[(Long, Double)] = {
-      val qn = norm(q)
-      (0 until size).map(i => (sim(q, qn, i), i))
-        .sortBy(t => (-t._1, ids(t._2)))
-        .take(k).map { case (s, i) => (ids(i), s) }
-    }
-
-    /** Exact top-k under the 6dp-ROUNDED (sim DESC, id ASC) key — the
-      * SAME total order q181's global window and its DuckDB oracle rank
-      * by. A pool cut by RAW sim can exclude a smaller-id vector that the
-      * rounded global ranking places above an included one whenever more
-      * than k candidates tie inside one rounded band (ADVICE r12: the
-      * q181 `K+6` margin was a heuristic patch over exactly that); with
-      * the pool and the window sharing one total order, every member of
-      * the global top-K is by construction inside its own cell's top-K.
-      */
-    def exactTopKRounded(q: Array[Float], k: Int): Seq[(Long, Double)] = {
       val qn = norm(q)
       (0 until size).map(i => (Hnsw.r6(sim(q, qn, i)), i))
         .sortBy(t => (-t._1, ids(t._2)))
@@ -371,23 +379,32 @@ object Hnsw {
     }
   }
 
-  def buildShard(rows: Iterator[VecRow]): (ShardGraph, Seq[VecRow]) = {
-    val sorted = rows.toIndexedSeq.sortBy(_.vec_id)
+  /** The one per-shard build: a shard's rows inserted in ascending vec_id,
+    * whatever order they arrive in — the order every gate's graph state,
+    * hence every output, depends on.
+    */
+  def buildShard(rows: Iterator[VecRow]): ShardGraph = {
     val g = new ShardGraph
-    sorted.foreach(r => g.insert(r.vec_id, r.embedding))
-    (g, sorted)
+    rows.toIndexedSeq.sortBy(_.vec_id).foreach(r => g.insert(r.vec_id, r.embedding))
+    g
   }
 
-  private def vecRows(s: SparkSession, d: String) = {
+  private def vecRows(s: SparkSession, d: String): Dataset[VecRow] = {
     import s.implicits._
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
       .as[VecRow]
   }
 
+  /** The isotropic family's shard key: `vec_id % IsoShards`. */
+  private def isoKeyed(rows: Dataset[VecRow]): RDD[(Int, VecRow)] =
+    rows.rdd.map(r => ((r.vec_id % IsoShards).toInt, r))
+
   /** Partition keyed rows into EXACTLY one partition per dense shard key
     * (key k → partition k: HashPartitioner over non-negative Ints 0..n-1
-    * IS the identity map) at the RDD level and apply `f` per shard.
+    * IS the identity map) at the RDD level, [[buildShard]] each shard's
+    * graph and apply `f` to (shard key, graph). Every graph build of the
+    * family runs here.
     *
     * Why RDD, not Dataset groupByKey (round-14 optimization finding): the
     * groupByKey exchange is AQE-managed, and AQE's small-partition
@@ -400,58 +417,45 @@ object Hnsw {
     * stage's cost is graph construction per GROUP, invisible to byte
     * statistics. An RDD exchange is not adaptive, so the documented
     * one-task-per-shard parallelism actually holds at every scale, and
-    * per-graph content (hence every gate output) is byte-identical — the
-    * builders sort each shard's rows by vec_id before inserting.
+    * per-graph content (hence every gate output) is byte-identical.
     */
-  private def perShard[T: scala.reflect.ClassTag, R: scala.reflect.ClassTag](
-      keyed: org.apache.spark.rdd.RDD[(Int, T)], n: Int)(
-      f: (Int, scala.collection.immutable.IndexedSeq[T]) => Iterator[R])
-      : org.apache.spark.rdd.RDD[R] =
+  private def perShard[R: scala.reflect.ClassTag](
+      keyed: RDD[(Int, VecRow)], n: Int)(f: (Int, ShardGraph) => Iterator[R])
+      : RDD[R] =
     keyed.partitionBy(new org.apache.spark.HashPartitioner(n))
       .mapPartitionsWithIndex { (p, it) =>
-        val rows = it.map(_._2).toVector
-        if (rows.isEmpty) Iterator.empty else f(p, rows)
+        if (it.isEmpty) Iterator.empty else f(p, buildShard(it.map(_._2)))
       }
 
-  /** Shard-grouped build + per-node emission, shared by the three gates.
-    * `oldOnly`: build from vec_id % 10 != 0 first, then INSERT the rest
-    * incrementally into the same graphs (the q174 path).
+  /** Per-graph hit emission shared by every search path (isotropic fresh
+    * build and stored-index load, routed cells, clustered sub-graphs): for
+    * every broadcast probe, the graph's exact top-K pool, and its HNSW
+    * top-K when `probed(query_id)` says the query probes this shard. The
+    * pool is cut in the global window's own total order (see
+    * [[ShardGraph.exactTopK]]), so K rows per shard carry every global
+    * top-K member.
     */
-  private def shardNodes(s: SparkSession, d: String,
-      incremental: Boolean): org.apache.spark.sql.Dataset[NodeRow] = {
-    import s.implicits._
-    val rdd = perShard(
-      vecRows(s, d).rdd.map(r => ((r.vec_id % IsoShards).toInt, r)),
-      IsoShards) { (shard, rs) =>
-      val rows = rs.sortBy(_.vec_id)
-      val g = new ShardGraph
-      if (incremental) {
-        rows.filter(_.vec_id % 10 != 0).foreach(r => g.insert(r.vec_id, r.embedding))
-        rows.filter(_.vec_id % 10 == 0).foreach(r => g.insert(r.vec_id, r.embedding))
-      } else rows.foreach(r => g.insert(r.vec_id, r.embedding))
-      (0 until g.size).iterator.map(i =>
-        NodeRow(shard, g.idOf(i), g.levelAt(i), g.degreesOk(i)))
+  private def emitHits(g: ShardGraph, shard: Int, probes: Array[VecRow],
+      probed: Long => Boolean): Iterator[Hit] = {
+    val n = g.size.toLong
+    probes.iterator.flatMap { q =>
+      val in = probed(q.vec_id)
+      val hnsw = if (in) g.search(q.embedding, K, EfS) else Seq.empty
+      hnsw.map { case (id, sm) =>
+        Hit(q.vec_id, id, sm, exact = false, in_probed = true, shard, n) } ++
+        g.exactTopK(q.embedding, K).map { case (id, sm) =>
+          Hit(q.vec_id, id, sm, exact = true, in_probed = in, shard, n) }
     }
-    s.createDataset(rdd)
   }
 
-  /** Per-graph hit emission shared by every isotropic search path (fresh
-    * build, incremental, stored-index load): HNSW top-k AND exact top-k
-    * for every broadcast query. Exact pool is K+6 per shard: the emitted
-    * exact top-K ranks on the ROUNDED sim (the cross-engine order), so the
-    * pool must carry a margin past any 6dp tie straddling a shard's
-    * unrounded cut. Every hit row carries its shard's node count, so
-    * n_indexed is a fact about the SAME graphs the search ran on.
+  /** The hit frame every search gate ranks. It is localCheckpointed: the
+    * exact ranking and the recall measurement both consume it (q174's
+    * n_indexed too), and an unbroken lineage would rebuild every shard
+    * graph per consumer.
     */
-  private def emitHits(g: ShardGraph, shard: Int,
-      qs: Array[VecRow]): Iterator[Hit] = {
-    val n = g.size.toLong
-    qs.iterator.flatMap { q =>
-      g.search(q.embedding, K, EfS).map { case (id, sm) =>
-        Hit(q.vec_id, id, sm, exact = false, shard, n) } ++
-        g.exactTopK(q.embedding, K + 6).map { case (id, sm) =>
-          Hit(q.vec_id, id, sm, exact = true, shard, n) }
-    }
+  private def hitFrame(s: SparkSession, hits: RDD[Hit]): DataFrame = {
+    import s.implicits._
+    s.createDataset(hits).toDF().localCheckpoint(true)
   }
 
   /** The ≤ NQueries probe vectors, driver-collected and broadcast. */
@@ -462,72 +466,62 @@ object Hnsw {
     s.sparkContext.broadcast(queries)
   }
 
-  /** Shard-grouped search: per shard, HNSW top-k AND exact top-k for every
-    * query; the caller merges globally and scores recall.
-    */
-  private def shardHits(s: SparkSession, d: String,
-      incremental: Boolean): org.apache.spark.sql.Dataset[Hit] = {
-    import s.implicits._
+  /** Fresh-build isotropic search: every shard is probed. */
+  private def shardHits(s: SparkSession, d: String): DataFrame = {
     val bq = probeVecs(s, d)
-    val rdd = perShard(
-      vecRows(s, d).rdd.map(r => ((r.vec_id % IsoShards).toInt, r)),
-      IsoShards) { (shard, rs) =>
-      val rows = rs.sortBy(_.vec_id)
-      val g = new ShardGraph
-      if (incremental) {
-        rows.filter(_.vec_id % 10 != 0).foreach(r => g.insert(r.vec_id, r.embedding))
-        rows.filter(_.vec_id % 10 == 0).foreach(r => g.insert(r.vec_id, r.embedding))
-      } else rows.foreach(r => g.insert(r.vec_id, r.embedding))
-      emitHits(g, shard, bq.value)
-    }
-    s.createDataset(rdd)
+    hitFrame(s, perShard(isoKeyed(vecRows(s, d)), IsoShards) { (shard, g) =>
+      emitHits(g, shard, bq.value, _ => true)
+    })
   }
 
-  /** The differential gate frame (VERDICT r10 #5): one row per (probe,
-    * rank ≤ K) carrying the ENGINE-exact global top-k — hash-compared
-    * against DuckDB's independent brute-force cosine top-k — plus the
-    * per-probe HNSW recall contract as a boolean column (recall is only
-    * measurable in-engine; the oracle states it as TRUE, and a search miss
-    * below the floor flips the column and fails the hash). The hit frame
-    * is localCheckpointed: both the exact merge and the recall measurement
-    * consume it, and an unbroken lineage would rebuild every shard graph
-    * per consumer.
-    */
-  private def recallDifferential(s: SparkSession, d: String,
-      incremental: Boolean, withNIndexed: Boolean = false): DataFrame =
-    differentialOf(shardHits(s, d, incremental).toDF(), withNIndexed)
-
-  /** The differential frame from an already-built hits Dataset — shared by
-    * the build-per-run paths and the stored-index load path (q183/q174).
+  /** The differential gate frame (VERDICT r10 #5), shared by every search
+    * gate: one row per (probe, rank ≤ K) carrying the ENGINE-exact global
+    * top-k — hash-compared against DuckDB's independent brute-force cosine
+    * top-k — its `in_probed` flag, and the per-probe HNSW recall contract
+    * as a boolean column (recall is only measurable in-engine; the oracle
+    * states it as TRUE, and a search miss below the floor flips the column
+    * and fails the hash). Each caller selects the columns its oracle has.
     *
     * Plan shape (optimization round 14, guide §2.4 "remove shuffles
-    * outright"): ONE window pass ranks BOTH hit kinds — partitioning by
-    * (exact, query_id) gives each kind its own rank universe, and the
-    * ordering is the 6dp-ROUNDED (sim DESC, vec_id) total order the DuckDB
-    * oracle computes (rounding is monotone, so this only merges unrounded
-    * near-ties, never inverts) — and ONE grouped pass computes recall@K
-    * per query as |exact-top ∩ hnsw-top| / |exact-top| over the K-bounded
-    * collected id sets. The previous shape (a second per-kind window, a
-    * left-semi join, two groupBys and a right join — ~4 extra exchanges,
-    * each an AQE stage-job on a K·NQueries·Shards-row frame) computed the
-    * same numbers; the collected arrays here are bounded at K per kind by
-    * the rank filter, so the agg state is O(K), not O(corpus).
+    * outright"): every rank is a row_number over the 6dp-ROUNDED (sim
+    * DESC, vec_id) total order the DuckDB oracles compute (rounding is
+    * monotone, so this only merges unrounded near-ties, never inverts),
+    * and each kind of hit gets its own rank universe from the partition
+    * key. `rn`, partitioned by (exact, query_id), is the global rank;
+    * `prn` adds `in_probed` to the key, so an exact row's `prn` is its
+    * rank WITHIN the query's probed shards (an HNSW row's equals its
+    * `rn`: the search only runs on probed shards). Each consumer reads one
+    * of them, Spark prunes the other, and the `≤ K` filter becomes a
+    * per-partition group limit ahead of the exchange. `recall` turns the
+    * ranked frame into one (query_id, recall) row per probe in ONE
+    * grouped pass over K-bounded sets — [[idRecall]] or q181's
+    * [[scoreRecall]].
     */
-  private def differentialOf(rawHits: DataFrame,
-      withNIndexed: Boolean): DataFrame = {
-    val hits = rawHits.localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("exact", "query_id")
-      .orderBy(round(col("sim"), 6).desc, col("vec_id"))
+  private def differentialOf(hits: DataFrame,
+      recall: DataFrame => DataFrame = idRecall): DataFrame = {
+    def rankWithin(keys: String*) = row_number().over(
+      Window.partitionBy(keys.map(col): _*)
+        .orderBy(round(col("sim"), 6).desc, col("vec_id")))
     val ranked = hits
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-    val exact = ranked.filter(col("exact"))
+      .withColumn("rn", rankWithin("exact", "query_id"))
+      .withColumn("prn", rankWithin("exact", "in_probed", "query_id"))
+    val exact = ranked.filter(col("exact") && col("rn") <= K)
       .select(col("query_id"), col("rn").cast("int").as("rank"),
-        col("vec_id"), round(col("sim"), 6).as("sim"))
-    // every query has exact rows (each shard emits an exact pool per
-    // probe), so n_exact ≥ 1 and the division is total
-    val rec = ranked.groupBy("query_id")
+        col("vec_id"), round(col("sim"), 6).as("sim"), col("in_probed"))
+    exact.join(broadcast(recall(ranked)), "query_id")
+      .select(col("query_id"), col("rank"), col("vec_id"), col("sim"),
+        col("in_probed"), (col("recall") >= RecallFloor).as("recall_ok"))
+  }
+
+  /** Recall@K by id: |probed exact top-K ∩ HNSW top-K| / |probed exact
+    * top-K|. The HNSW side only runs on probed shards, so this is the
+    * search quality reduced fan-out can control; with every shard probed
+    * (the isotropic family) it is plain recall against the global exact
+    * top-K. Probed shards are never empty, so n_exact ≥ 1 per query.
+    */
+  private def idRecall(ranked: DataFrame): DataFrame =
+    ranked.filter(col("in_probed") && col("prn") <= K)
+      .groupBy("query_id")
       .agg(
         sum(col("exact").cast("long")).as("n_exact"),
         size(array_intersect(
@@ -535,22 +529,10 @@ object Hnsw {
           collect_set(when(!col("exact"), col("vec_id")))))
           .cast("long").as("n_found"))
       .select(col("query_id"), (col("n_found") / col("n_exact")).as("recall"))
-    val base = exact.join(broadcast(rec), "query_id")
-      .select(col("query_id"), col("rank"), col("vec_id"), col("sim"),
-        (col("recall") >= RecallFloor).as("recall_ok"))
-    if (!withNIndexed) base
-    else {
-      // n_indexed summed from each shard's self-reported node count —
-      // measured on the graphs the search ran, not a second build
-      val nIdx = hits.select(col("shard"), col("n_shard_nodes")).distinct()
-        .agg(sum(col("n_shard_nodes")).as("n_indexed"))
-      base.crossJoin(broadcast(nIdx))
-    }
-  }
 
-  /** The DuckDB side of [[recallDifferential]]: exact global top-K per
-    * probe by brute-force cosine (the q40 formulation), recall_ok as the
-    * stated contract.
+  /** The DuckDB side of an isotropic [[differentialOf]]: exact global
+    * top-K per probe by brute-force cosine (the q40 formulation),
+    * recall_ok as the stated contract.
     */
   private def sqlExactTopK(extraCols: String, extraFrom: String): String =
     s"""
@@ -573,16 +555,45 @@ object Hnsw {
       WHERE rank <= $K
     """
 
+  private val isoCols =
+    Seq("query_id", "rank", "vec_id", "sim", "recall_ok").map(col)
+
+  /** The build claims of one index row — (shard, level, is_entry,
+    * deg_ok), deg_ok = one adjacency list per level, each within its cap.
+    * q172 checks them on the graphs it just built, q182 on the rows it
+    * read back from parquet.
+    */
+  private def nodeClaims(r: IndexRow): (Int, Int, Boolean, Boolean) =
+    (r.shard, r.level, r.is_entry,
+      r.adj.length == r.level + 1 &&
+        r.adj.zipWithIndex.forall { case (ns, l) =>
+          ns.length <= (if (l == 0) M0 else M) })
+
+  private val nodeClaimCols = Seq("shard", "level", "is_entry", "deg_ok")
+
+  /** The level histogram with the degree contract, from node claims. */
+  private def levelHistogram(nodes: DataFrame): DataFrame =
+    nodes.groupBy(col("level"))
+      .agg(count(lit(1)).as("n_nodes"),
+        min(col("deg_ok").cast("int")).cast("boolean").as("deg_ok"))
+
+  /** q172's rows for any vector set: build its isotropic shard graphs and
+    * histogram their node claims.
+    */
+  private[graft] def buildGate(s: SparkSession, src: Dataset[VecRow])
+      : DataFrame = {
+    import s.implicits._
+    levelHistogram(s.createDataset(buildIndexRows(src).map(nodeClaims))
+      .toDF(nodeClaimCols: _*))
+  }
+
   /** Build gate: the level histogram is fully oracle-mirrorable (the
     * integer level rule), and the degree bound is the q165-style
     * hardcoded-contract column.
     */
   val q172HnswBuild = Q(
     "q172_hnsw_build",
-    (s, d) => shardNodes(s, d, incremental = false).toDF()
-      .groupBy(col("level"))
-      .agg(count(lit(1)).as("n_nodes"),
-        min(col("deg_ok").cast("int")).cast("boolean").as("deg_ok")),
+    (s, d) => buildGate(s, vecRows(s, d)),
     Some("""
       WITH h AS (
         SELECT CAST('0x' || substr(md5('hnsw-' || CAST(vec_id AS VARCHAR)),
@@ -608,7 +619,7 @@ object Hnsw {
     */
   val q173HnswQuery = Q(
     "q173_hnsw_query",
-    (s, d) => recallDifferential(s, d, incremental = false),
+    (s, d) => differentialOf(shardHits(s, d)).select(isoCols: _*),
     Some(sqlExactTopK("", "")),
   )
 
@@ -652,18 +663,8 @@ object Hnsw {
   /** Build shard graphs from `src` and dump them as index rows — one
     * RDD-partition per shard (see [[perShard]]).
     */
-  private def buildIndexRows(s: SparkSession,
-      src: org.apache.spark.sql.Dataset[VecRow])
-      : org.apache.spark.sql.Dataset[IndexRow] = {
-    import s.implicits._
-    val rdd = perShard(
-      src.rdd.map(r => ((r.vec_id % IsoShards).toInt, r)),
-      IsoShards) { (shard, rs) =>
-      val (g, _) = buildShard(rs.iterator)
-      g.toIndexRows(shard)
-    }
-    s.createDataset(rdd)
-  }
+  private[graft] def buildIndexRows(src: Dataset[VecRow]): RDD[IndexRow] =
+    perShard(isoKeyed(src), IsoShards)((shard, g) => g.toIndexRows(shard))
 
   /** Index paths already verified (or built) by THIS application, so the
     * per-call freshness scan runs once per JVM, not once per query. Sound
@@ -685,20 +686,22 @@ object Hnsw {
     * [[verifiedIndexes]]).
     */
   private def ensureIndex(s: SparkSession, d: String, variant: String,
-      src: org.apache.spark.sql.Dataset[VecRow]): String = {
+      src: Dataset[VecRow]): String = {
     val path = indexPath(s, d, variant)
     if (verifiedIndexes.contains(path)) return path
     val want = fingerprint(src.toDF())
     val have =
       try fingerprint(s.read.parquet(path))
-      catch { case _: Throwable => (-1L, -1L) } // missing/unreadable
-    if (want != have)
+      catch { case NonFatal(_) => (-1L, -1L) } // missing/unreadable
+    if (want != have) {
       // no repartition before the write: buildIndexRows' perShard already
       // exchanged one-shard-per-partition, so partitionBy(shard) writes
       // one file per shard as-is — a second hash-exchange on the same
       // value would shuffle the full index again for the identical layout
-      buildIndexRows(s, src).toDF()
+      import s.implicits._
+      s.createDataset(buildIndexRows(src)).toDF()
         .write.mode("overwrite").partitionBy("shard").parquet(path)
+    }
     verifiedIndexes.add(path)
     path
   }
@@ -707,7 +710,7 @@ object Hnsw {
     * index each stored shard landed in.
     */
   private[graft] final case class StoredIndex(
-      rdd: org.apache.spark.rdd.RDD[IndexRow], partOf: Map[Int, Int])
+      rdd: RDD[IndexRow], partOf: Map[Int, Int])
 
   /** Routes shard keys to the partition [[StoredIndex.partOf]] gave them. */
   private final class ShardPartitioner(partOf: Map[Int, Int])
@@ -760,7 +763,7 @@ object Hnsw {
 
   /** The file scan at the root of a narrow lineage, if there is one. */
   @scala.annotation.tailrec
-  private def fileScanOf(r: org.apache.spark.rdd.RDD[_])
+  private def fileScanOf(r: RDD[_])
       : Option[org.apache.spark.sql.execution.datasources.FileScanRDD] =
     r match {
       case f: org.apache.spark.sql.execution.datasources.FileScanRDD => Some(f)
@@ -775,11 +778,10 @@ object Hnsw {
     * (each mapped whole into one task by [[loadStored]]) and the broadcast
     * probes. The shard id comes off the rows.
     */
-  private def storedHits(s: SparkSession, d: String,
-      path: String): org.apache.spark.sql.Dataset[Hit] = {
-    import s.implicits._
+  private def storedHits(s: SparkSession, d: String, path: String)
+      : DataFrame = {
     val bq = probeVecs(s, d)
-    val rdd = loadStored(s, path).rdd.mapPartitions { it =>
+    hitFrame(s, loadStored(s, path).rdd.mapPartitions { it =>
       val rs = it.toIndexedSeq
       if (rs.isEmpty) Iterator.empty
       else {
@@ -787,10 +789,9 @@ object Hnsw {
           "stored-index load mixed shards in one task — layout violated")
         val g = new ShardGraph
         g.loadFrom(rs)
-        emitHits(g, rs.head.shard, bq.value)
+        emitHits(g, rs.head.shard, bq.value, _ => true)
       }
-    }
-    s.createDataset(rdd)
+    })
   }
 
   /** Insert `fresh` into the graphs stored at `basePath` (old nodes are
@@ -802,8 +803,7 @@ object Hnsw {
     * stored partition of its own.
     */
   private[graft] def appendBatch(s: SparkSession, basePath: String,
-      fresh: org.apache.spark.sql.Dataset[VecRow])
-      : org.apache.spark.sql.Dataset[IndexRow] = {
+      fresh: Dataset[VecRow]): Dataset[IndexRow] = {
     import s.implicits._
     val stored = loadStored(s, basePath)
     val n = stored.rdd.getNumPartitions
@@ -814,9 +814,7 @@ object Hnsw {
       if (missing.isEmpty) stored.rdd
       else stored.rdd.union(
         s.sparkContext.parallelize(Seq.empty[IndexRow], missing.size))
-    val freshRdd = fresh.rdd
-      .map(r => ((r.vec_id % IsoShards).toInt, r))
-      .partitionBy(new ShardPartitioner(partOf))
+    val freshRdd = isoKeyed(fresh).partitionBy(new ShardPartitioner(partOf))
     s.createDataset(storedRdd.zipPartitions(freshRdd) { (storedIt, batchIt) =>
       val storedRows = storedIt.toIndexedSeq
       val batch = batchIt.map(_._2).toIndexedSeq.sortBy(_.vec_id)
@@ -866,13 +864,8 @@ object Hnsw {
       import s.implicits._
       clearIndex(s, d, "full")
       val path = ensureIndex(s, d, "full", vecRows(s, d))
-      val stored = s.read.parquet(path).as[IndexRow]
-      val nodes = stored.map { r =>
-        val degOk = r.adj.length == r.level + 1 &&
-          r.adj.zipWithIndex.forall { case (ns, l) =>
-            ns.length <= (if (l == 0) M0 else M) }
-        (r.shard, r.level, r.is_entry, degOk)
-      }.toDF("shard", "level", "is_entry", "deg_ok")
+      val nodes = s.read.parquet(path).as[IndexRow].map(nodeClaims)
+        .toDF(nodeClaimCols: _*)
         .localCheckpoint(true)
       // entry contract per shard: exactly 1 is_entry row, at the shard max
       val entryOk = nodes.groupBy("shard")
@@ -882,10 +875,7 @@ object Hnsw {
         .agg(min((col("n_entry") === 1 &&
           col("entry_l") === col("max_l")).cast("int")).cast("boolean")
           .as("entry_ok"))
-      nodes.groupBy(col("level"))
-        .agg(count(lit(1)).as("n_nodes"),
-          min(col("deg_ok").cast("int")).cast("boolean").as("deg_ok"))
-        .crossJoin(broadcast(entryOk))
+      levelHistogram(nodes).crossJoin(broadcast(entryOk))
     },
     Some("""
       WITH h AS (
@@ -915,7 +905,7 @@ object Hnsw {
     "q183_hnsw_search_stored",
     (s, d) => {
       val path = ensureIndex(s, d, "full", vecRows(s, d))
-      differentialOf(storedHits(s, d, path).toDF(), withNIndexed = false)
+      differentialOf(storedHits(s, d, path)).select(isoCols: _*)
     },
     Some(sqlExactTopK("", "")),
   )
@@ -949,7 +939,12 @@ object Hnsw {
         .write.mode("overwrite").partitionBy("shard").parquet(fullPath)
       // search the WRITTEN-BACK index (not the in-memory graphs): the gate
       // covers the persistence round trip of the updated graphs too
-      differentialOf(storedHits(s, d, fullPath).toDF(), withNIndexed = true)
+      val hits = storedHits(s, d, fullPath)
+      // n_indexed summed from each shard's self-reported node count —
+      // measured on the graphs the search ran, not a second build
+      val nIdx = hits.select(col("shard"), col("n_shard_nodes")).distinct()
+        .agg(sum(col("n_shard_nodes")).as("n_indexed"))
+      differentialOf(hits).select(isoCols: _*).crossJoin(broadcast(nIdx))
     },
     Some(sqlExactTopK(
       ", n_indexed",
@@ -982,58 +977,38 @@ object Hnsw {
 
   val RoutedProbe = 4
 
-  final case class RoutedHit(query_id: Long, vec_id: Long, sim: Double,
-      exact: Boolean, in_probed: Boolean)
-
-  private def routedHits(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[RoutedHit] = {
+  /** Routed search: each vector is keyed to its nearest of `Shards`
+    * codebook cells (the q42 IVF assignment), one graph per cell, and a
+    * query probes its [[RoutedProbe]] nearest cells.
+    */
+  private def routedHits(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, d)
     val cents = Similarity.ivfCodebook(e, Shards)
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
-    val scored = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cent_id"),
-        round(Similarity.cosine(col("embedding"), col("ce")), 6).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign))
-    // probe sets: NQueries × RoutedProbe rows — bounded, driver-collected
-    val probeSets: Map[Long, Set[Long]] = scored
-      .filter(col("vec_id") < NQueries && col("arn") <= RoutedProbe)
-      .select(col("vec_id"), col("cent_id"))
-      .as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (q, cs) => q -> cs.map(_._2).toSet }
-    val bp = s.sparkContext.broadcast(probeSets)
-    val queries = vecRows(s, d).filter(col("vec_id") < NQueries)
-      .collect().sortBy(_.vec_id)
-    val bq = s.sparkContext.broadcast(queries)
+    val cells = Similarity.ivfCellRanks(e, cents)
     // cell ids are codebook vec_ids (arbitrary longs); rank them into a
     // dense 0..Shards-1 key so perShard's identity partitioner gives one
     // task per cell — the Dataset groupByKey here was AQE-coalesced into
     // a single task at bench scale (see perShard)
     val cellRank = cents.select(col("cent_id")).as[Long].collect()
       .sorted.zipWithIndex.toMap
+    // probe sets as dense cell keys: NQueries × RoutedProbe rows —
+    // bounded, driver-collected
+    val probeSets: Map[Long, Set[Int]] = cells
+      .filter(col("vec_id") < NQueries && col("arn") <= RoutedProbe)
+      .select(col("vec_id"), col("cent_id"))
+      .as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (q, cs) => q -> cs.map(c => cellRank(c._2)).toSet }
+    val bp = s.sparkContext.broadcast(probeSets)
+    val bq = probeVecs(s, d)
     val bRank = s.sparkContext.broadcast(cellRank)
-    val rdd = perShard(
-      scored.filter(col("arn") === 1)
-        .select(col("cent_id").as("cell"), col("vec_id"), col("embedding"))
-        .as[(Long, Long, Array[Float])].rdd
-        .map(t => (bRank.value(t._1), t)),
-      Shards) { (_, ts) =>
-      val cell = ts.head._1
-      val rows = ts.map(t => VecRow(t._2, t._3)).sortBy(_.vec_id)
-      val g = new ShardGraph
-      rows.foreach(r => g.insert(r.vec_id, r.embedding))
-      bq.value.iterator.flatMap { q =>
-        val probed = bp.value(q.vec_id).contains(cell)
-        val hnsw =
-          if (probed) g.search(q.embedding, K, EfS).map { case (id, sm) =>
-            RoutedHit(q.vec_id, id, sm, exact = false, in_probed = true) }
-          else Seq.empty
-        hnsw ++ g.exactTopK(q.embedding, K + 6).map { case (id, sm) =>
-          RoutedHit(q.vec_id, id, sm, exact = true, in_probed = probed) }
-      }
-    }
-    s.createDataset(rdd)
+    val keyed = cells.filter(col("arn") === 1)
+      .select(col("cent_id"), col("vec_id"), col("embedding"))
+      .as[(Long, Long, Array[Float])].rdd
+      .map { case (cell, id, v) => (bRank.value(cell), VecRow(id, v)) }
+    hitFrame(s, perShard(keyed, Shards) { (cell, g) =>
+      emitHits(g, cell, bq.value, q => bp.value(q).contains(cell))
+    })
   }
 
   /** Routed-probe gate — see the block comment above for the contract
@@ -1041,50 +1016,11 @@ object Hnsw {
     * differential vs DuckDB brute force), each row's `in_probed` coverage
     * flag (hash-differential vs DuckDB's independent routing computation),
     * and `recall_ok` = routed-HNSW recall@K ≥ 0.9 against the probed-cell
-    * exact top-K (the engine-measured floor).
+    * exact top-K (the engine-measured floor, [[idRecall]]).
     */
   val q176HnswRouted = Q(
     "q176_hnsw_routed",
-    (s, d) => {
-      val hits = routedHits(s, d).toDF().localCheckpoint(true)
-      // One window pass ranks all three universes (optimization round 14,
-      // guide §2.4): partitioning by (exact, query_id) gives the global
-      // exact ranks (exact=true) and the HNSW ranks (exact=false; those
-      // rows are all in_probed by construction — the search only runs on
-      // probed cells), and the rank WITHIN the probed exact subset is the
-      // running in_probed count over the same window order (keys unique →
-      // the row frame is exact). The previous shape ran three windows over
-      // three filtered copies plus a semi-join, two groupBys and a right
-      // join — ~5 extra AQE stage-jobs on a bounded hit frame.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("exact", "query_id")
-        .orderBy(round(col("sim"), 6).desc, col("vec_id"))
-      val ranked = hits
-        .withColumn("rn", row_number().over(w))
-        .withColumn("prn",
-          sum(when(col("in_probed"), 1L).otherwise(0L)).over(
-            w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)))
-      val exact = ranked.filter(col("exact") && col("rn") <= K)
-        .select(col("query_id"), col("rn").cast("int").as("rank"),
-          col("vec_id"), round(col("sim"), 6).as("sim"), col("in_probed"))
-      // recall universe: probed-exact top-K (prn) vs HNSW top-K (rn);
-      // probed cells are never empty, so n_exact ≥ 1 per query
-      val rec = ranked
-        .filter((col("exact") && col("in_probed") && col("prn") <= K) ||
-          (!col("exact") && col("rn") <= K))
-        .groupBy("query_id")
-        .agg(
-          sum(col("exact").cast("long")).as("n_exact"),
-          size(array_intersect(
-            collect_set(when(col("exact"), col("vec_id"))),
-            collect_set(when(!col("exact"), col("vec_id")))))
-            .cast("long").as("n_found"))
-        .select(col("query_id"), (col("n_found") / col("n_exact")).as("recall"))
-      exact.join(broadcast(rec), "query_id")
-        .select(col("query_id"), col("rank"), col("vec_id"), col("sim"),
-          col("in_probed"), (col("recall") >= RecallFloor).as("recall_ok"))
-    },
+    (s, d) => differentialOf(routedHits(s, d)),
     Some(s"""
       WITH dim AS (SELECT CAST(unnest(range(1, 65)) AS INT) AS dd),
       cents AS (SELECT vec_id AS cent_id, embedding AS ce FROM embeddings
@@ -1198,7 +1134,7 @@ object Hnsw {
   }
 
   /** Spark round()-identical 6dp rounding (HALF_UP) — the cross-engine
-    * comparison grid for centroid cosines.
+    * comparison grid for centroid cosines and every exact pool's key.
     */
   private def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
     .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
@@ -1212,26 +1148,24 @@ object Hnsw {
       .sortBy { case (cc, c) => (-cc, c) }
       .map(_._2).toArray
 
-  final case class ClusteredHit(query_id: Long, vec_id: Long, sim: Double,
-      exact: Boolean, in_probed: Boolean)
-
   /** Per-(cell, sub-shard) graphs over the synth corpus; each query
     * searches only its [[RoutedProbe]] nearest cells (all their sub-
-    * graphs) and every sub-graph emits its exact top-(K+6) pool so the
+    * graphs) and every sub-graph emits its exact top-K pool so the
     * caller can rank the GLOBAL exact top-K. The synth + assignment is
     * ONE narrow map over vec_ids (8 fixed 64-dim cosines per row, no
-    * shuffle); the only exchange is the per-(cell, sub-shard) groupByKey
-    * the graph build needs regardless.
+    * shuffle); the only exchange is the [[perShard]] one the graph build
+    * needs regardless.
     */
-  private[graft] def clusteredHits(s: SparkSession, d: String)
-      : org.apache.spark.sql.Dataset[ClusteredHit] = {
+  private[graft] def clusteredHits(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ids = Tables.embeddings(s, d).select(col("vec_id")).as[Long]
     // probe sets: NQueries × RoutedProbe — bounded, computed driver-side
     // from the same pure closed form the executors use
     val queries = ids.filter(_ < NQueries).collect().sorted
-      .map(q => (q, synthVec(q), rankCells(synthVec(q)).take(RoutedProbe).toSet))
+      .map(q => VecRow(q, synthVec(q)))
     val bq = s.sparkContext.broadcast(queries)
+    val bp = s.sparkContext.broadcast(queries.map(q =>
+      q.vec_id -> rankCells(q.embedding).take(RoutedProbe).toSet).toMap)
     // carry the synthesized vector THROUGH the shuffle (64 floats/row)
     // instead of re-synthesizing it in the build stage: synthVec costs 64
     // md5 digests per vector, and the assignment map runs at full
@@ -1245,48 +1179,50 @@ object Hnsw {
     // #2): keyed by cell alone, ONE task built and held a whole cell's
     // graph — NClust(=8)-way parallelism with a per-task memory bound of
     // corpus/NClust, the exact shape the isotropic family already avoids
-    // with vec_id % Shards. Each cell now builds SubShards independent
+    // with vec_id % IsoShards. Each cell builds SubShards independent
     // sub-graphs (32-way fan-out, per-task memory corpus/(NClust·S)); a
     // probed cell searches every sub-graph and the global window merges
-    // their pools exactly as the isotropic merge does. The exact output is
-    // UNCHANGED: the union of sub-shard rounded top-(K+6) pools contains
-    // the cell's rounded top-(K+6) (a global top-k is inside some
-    // sub-shard's top-k), so the gate's hash stays green; the HNSW side
-    // merges K-deep results from S graphs instead of one, which can only
-    // help recall.
+    // their pools exactly as the isotropic merge does (a global top-k is
+    // inside its own sub-shard's top-k); the HNSW side merges K-deep
+    // results from S graphs instead of one, which can only help recall.
     // (cell, sub-shard) encodes to the dense key cell·SubShards + sub, so
-    // perShard's identity partitioner yields one task per sub-graph — the
-    // Dataset groupByKey here was AQE-coalesced into a single task at
-    // bench scale (see perShard), silently serializing the 32-way build
-    val rdd = perShard(
-      ids.map { id =>
-        val v = synthVec(id)
-        (rankCells(v)(0), id, v)
-      }.rdd.map(t =>
-        ((t._1 * SubShards + (t._2 % SubShards)).toInt, t)),
-      NClust * SubShards) { (_, ts) =>
-      val cell = ts.head._1
-      val rows = ts.map(t => (t._2, t._3)).sortBy(_._1)
-      val g = new ShardGraph
-      rows.foreach { case (id, v) => g.insert(id, v) }
-      bq.value.iterator.flatMap { case (qid, qv, probes) =>
-        val probed = probes.contains(cell)
-        // the isotropic beam: with the diversity heuristic
-        // (ShardGraph.selectDiverse) recall over the 50 probes was 1.000 at
-        // ef 96, 192 and 400 alike at sf1
-        // (bench/hnsw_efclustered_tune_sf1.json), so no wider beam
-        val hnsw =
-          if (probed) g.search(qv, K, EfS).map { case (id, sm) =>
-            ClusteredHit(qid, id, sm, exact = false, in_probed = true) }
-          else Seq.empty
-        // rounded-key pool: shares the global window's total order, so
-        // the +6 margin is true slack, not a tie-band bet (ADVICE r12)
-        hnsw ++ g.exactTopKRounded(qv, K + 6).map { case (id, sm) =>
-          ClusteredHit(qid, id, sm, exact = true, in_probed = probed) }
-      }
+    // perShard's identity partitioner yields one task per sub-graph, and
+    // a key's cell is key / SubShards.
+    val keyed = ids.rdd.map { id =>
+      val v = synthVec(id)
+      ((rankCells(v)(0) * SubShards + id % SubShards).toInt, VecRow(id, v))
     }
-    s.createDataset(rdd)
+    // the isotropic beam: with the diversity heuristic
+    // (ShardGraph.selectDiverse) recall over the 50 probes was 1.000 at
+    // ef 96, 192 and 400 alike at sf1
+    // (bench/hnsw_efclustered_tune_sf1.json), so no wider beam
+    hitFrame(s, perShard(keyed, NClust * SubShards) { (key, g) =>
+      emitHits(g, key, bq.value,
+        q => bp.value(q).contains((key / SubShards).toLong))
+    })
   }
+
+  /** Recall@K by score, TIE-TOLERANT, against the GLOBAL exact top-K: a
+    * returned item counts as found when its 6dp similarity is >= the K-th
+    * exact item's — the standard definition when scores tie at the
+    * boundary. Id-join recall would demand the search reproduce vec_id
+    * TIE-BREAKING among equal-similarity neighbors, which no
+    * score-ordered index can promise and which says nothing about search
+    * quality (an equal-sim neighbor IS an equally good answer). The
+    * K-bounded HNSW top scores are collected per query and counted
+    * against the exact side's K-th score (s10) in one aggregate; agg state
+    * is O(K) per query.
+    */
+  private def scoreRecall(ranked: DataFrame): DataFrame =
+    ranked.filter(col("rn") <= K)
+      .groupBy("query_id")
+      .agg(
+        min(when(col("exact"), round(col("sim"), 6))).as("s10"),
+        sum(col("exact").cast("long")).as("n_exact"),
+        collect_list(when(!col("exact"), round(col("sim"), 6))).as("hsims"))
+      .select(col("query_id"),
+        (size(filter(col("hsims"), _ >= col("s10"))).cast("long") /
+          col("n_exact")).as("recall"))
 
   /** Clustered routed gate — the global floor q176 cannot honestly claim:
     * output is the engine's exact GLOBAL top-K per probe (hash-checked
@@ -1295,56 +1231,11 @@ object Hnsw {
     * recomputes assignment + probe sets from the closed form), and
     * `recall_ok` = routed-HNSW recall@K against the GLOBAL exact top-K
     * ≥ 0.9 — at RoutedProbe/NClust = half fan-out, with the tie-tolerant
-    * (score-based) recall definition documented at the `rec` frame below.
+    * [[scoreRecall]].
     */
-  /** (exact global top-K frame, per-query recall frame) from a
-    * checkpointed [[clusteredHits]] frame.
-    *
-    * GLOBAL recall, TIE-TOLERANT (score-based recall@K): a returned item
-    * counts as found when its 6dp similarity is >= the K-th exact item's
-    * — the standard definition when scores tie at the boundary. Id-join
-    * recall would demand the search reproduce vec_id TIE-BREAKING among
-    * equal-similarity neighbors, which no score-ordered index can
-    * promise and which says nothing about search quality (an equal-sim
-    * neighbor IS an equally good answer).
-    */
-  private def clusteredExactAndRecall(hits: DataFrame)
-      : (DataFrame, DataFrame) = {
-    // One window pass ranks both hit kinds (partition on (exact,
-    // query_id)), one grouped pass computes the tie-tolerant recall: the
-    // K-bounded HNSW top scores are collected per query and counted
-    // against the exact side's K-th score (s10) in the same aggregate —
-    // replacing a second window, a broadcast join and a second groupBy
-    // (optimization round 14, guide §2.4). Agg state is O(K) per query.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("exact", "query_id")
-      .orderBy(round(col("sim"), 6).desc, col("vec_id"))
-    val ranked = hits
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-    val exact = ranked.filter(col("exact"))
-      .select(col("query_id"), col("rn").cast("int").as("rank"),
-        col("vec_id"), round(col("sim"), 6).as("sim"), col("in_probed"))
-    val rec = ranked.groupBy("query_id")
-      .agg(
-        min(when(col("exact"), round(col("sim"), 6))).as("s10"),
-        sum(col("exact").cast("long")).as("n_exact"),
-        collect_list(when(!col("exact"), round(col("sim"), 6))).as("hsims"))
-      .select(col("query_id"),
-        (size(filter(col("hsims"), _ >= col("s10"))).cast("long") /
-          col("n_exact")).as("recall"))
-    (exact, rec)
-  }
-
   val q181HnswClustered = Q(
     "q181_hnsw_clustered",
-    (s, d) => {
-      val hits = clusteredHits(s, d).toDF().localCheckpoint(true)
-      val (exact, rec) = clusteredExactAndRecall(hits)
-      exact.join(broadcast(rec), "query_id")
-        .select(col("query_id"), col("rank"), col("vec_id"), col("sim"),
-          col("in_probed"), (col("recall") >= RecallFloor).as("recall_ok"))
-    },
+    (s, d) => differentialOf(clusteredHits(s, d), scoreRecall),
     Some(s"""
       WITH dim AS (SELECT CAST(unnest(range(0, 64)) AS BIGINT) AS d),
       vecs AS (

@@ -43,9 +43,12 @@ import org.apache.spark.sql.functions._
 object Quantiles {
 
   private val K = 9 // decile cuts
-  private val Acc = 10000 // approx_percentile rank error <= n/Acc
-  private val W = 5e-4 // bracket half-width in percentile space
-  private val SmallN = 100000L // below this the whole column is the histogram
+  // The sketch constants every bracketed kernel uses (these deciles, the
+  // medians below, and TextCuration's winsor bounds): coverage holds when
+  // W·n − n/Acc ≥ 2 for all n ≥ SmallN.
+  private[operators] val Acc = 10000 // approx_percentile rank error <= n/Acc
+  private[operators] val W = 5e-4 // bracket half-width in percentile space
+  private[operators] val SmallN = 100000L // below this the whole column is the histogram
 
   /** Step 1+2: sketch-bracketed cells for column `c` of `li`. One row per
     * in-bracket value plus one per collapsed between-bracket region,

@@ -202,6 +202,20 @@ object Similarity {
     */
   def ivfK(n: Long): Int = math.max(16, math.round(math.sqrt(n.toDouble)).toInt)
 
+  /** Every vector's codebook cells ranked nearest-first: one row per
+    * (vector, centroid) carrying `vec_id`, `embedding`, `cent_id`, the
+    * 6dp-rounded centroid cosine `ccos` and its rank `arn` (ties → lowest
+    * centroid id). `arn = 1` is the vector's own cell, `arn <= p` its `p`
+    * nearest — the one IVF cell assignment behind both [[ivfSearch]] and
+    * the routed HNSW gate. A map-side cross with the broadcast codebook.
+    */
+  def ivfCellRanks(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("embedding"), col("cent_id"),
+        round(cosine(col("embedding"), col("ce")), 6).as("ccos"))
+      .withColumn("arn", row_number().over(Window.partitionBy("vec_id")
+        .orderBy(col("ccos").desc, col("cent_id"))))
+
   /** IVF search, parameterized: `k`-centroid deterministic codebook, each
     * vector assigned to its nearest centroid (ties → lowest centroid id),
     * each query probing its `nprobe` nearest cells — multi-probe recovers
@@ -215,13 +229,7 @@ object Similarity {
   def ivfSearch(e: DataFrame, k: Int, nprobe: Int, topK: Int,
       nQueries: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= k, s"nprobe must be in [1, k=$k]: $nprobe")
-    val cents = ivfCodebook(e, k)
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("ccos").desc, col("cent_id"))
-    val scored = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cent_id"),
-        round(cosine(col("embedding"), col("ce")), 6).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign))
+    val scored = ivfCellRanks(e, ivfCodebook(e, k))
     val assigned = scored.filter(col("arn") === 1)
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"))
     val qs = scored.filter(col("vec_id") < nQueries && col("arn") <= nprobe)

@@ -305,9 +305,7 @@ object TextCuration {
     // is ≤ ~2·w·n ranks ≈ 0.1% of the column, whose distinct 2-decimal
     // values stay window-safe. For an all-distinct column at extreme n,
     // raise Acc and shrink W by the same factor — the guarantee holds.
-    val Acc = 10000 // sketch rank error <= n/Acc
-    val W = 5e-4 // bracket half-width in percentile space
-    val SmallN = 100000L // below this, skip the bracket: whole column is the histogram
+    import Quantiles.{Acc, SmallN, W}
     val probes = Seq(0.01 - W, 0.01 + W, 0.99 - W, 0.99 + W)
     val stats = li.agg(
       count(col(c)).as("n"),
@@ -380,9 +378,7 @@ object TextCuration {
     */
   private[graft] def groupWinsorCells(
       li: DataFrame, c: String, keys: Seq[String]): DataFrame = {
-    val Acc = 10000
-    val W = 5e-4
-    val SmallN = 100000L
+    import Quantiles.{Acc, SmallN, W}
     val probes = Seq(0.01 - W, 0.01, 0.01 + W, 0.99 - W, 0.99, 0.99 + W)
     val stats = li.groupBy(keys.map(col): _*).agg(
       count(col(c)).as("n"),

@@ -24,25 +24,72 @@ class HnswSpec extends SparkSpec {
     assert((0L until 500L).count(Hnsw.levelOf(_) >= 1) > 50)
   }
 
+  // Independent of ShardGraph's code: plain Scala doubles, Scala's own
+  // BigDecimal rounding and an independent sort.
+  private def naiveCos(a: Array[Float], b: Array[Float]): Double = {
+    val dot = a.indices.map(i => a(i).toDouble * b(i).toDouble).sum
+    val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
+    val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
+    dot / (na * nb)
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Naive top-k ids of `q` over `vecs` in rounded (sim desc, vec_id) order. */
+  private def naiveTopK(q: Array[Float], vecs: Seq[Hnsw.VecRow], k: Int) =
+    vecs.map(v => (round6(naiveCos(q, v.embedding)), v.vec_id))
+      .sortBy(t => (-t._1, t._2)).take(k).map(_._2)
+
   test("exactTopK matches an independently-coded naive cosine top-k") {
     // ADVICE r10: break the shared-code correlation between search and the
     // in-plan exact scan — this recomputes cosine top-k with none of
-    // ShardGraph's code (plain Scala doubles, independent sort)
+    // ShardGraph's code
     val rnd = new scala.util.Random(23)
     val vecs = (0L until 300L).map(i =>
       Hnsw.VecRow(i, Array.fill(64)(rnd.nextGaussian().toFloat)))
-    val (g, _) = Hnsw.buildShard(vecs.iterator)
-    def naiveCos(a: Array[Float], b: Array[Float]): Double = {
-      val dot = a.indices.map(i => a(i).toDouble * b(i).toDouble).sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      dot / (na * nb)
-    }
+    val g = Hnsw.buildShard(vecs.iterator)
     vecs.take(15).foreach { q =>
-      val naive = vecs.map(v => (naiveCos(q.embedding, v.embedding), v.vec_id))
-        .sortBy(t => (-t._1, t._2)).take(Hnsw.K).map(_._2)
+      val naive = naiveTopK(q.embedding, vecs, Hnsw.K)
       val got = g.exactTopK(q.embedding, Hnsw.K).map(_._1)
-      assert(got == naive.toSeq, s"probe ${q.vec_id}")
+      assert(got == naive, s"probe ${q.vec_id}")
+    }
+  }
+
+  test("exact pool of K holds the rounded top-K when a 6dp band straddles the cut") {
+    // 3 vectors clearly above, then more than K + 6 vectors inside ONE
+    // 6dp band whose RAW similarity rises as vec_id rises, then a tail
+    // below: the cut falls inside the band. The rounded order keeps the
+    // band's SMALLEST ids; a pool cut by raw sim keeps its largest, and a
+    // raw pool K + 6 deep still misses the smallest.
+    val q = Array(1f, 0f)
+    val high = Seq(0.5f, 0.6f, 0.7f).zipWithIndex.map { case (b, i) =>
+      Hnsw.VecRow(i.toLong, Array(1f, b)) }
+    val bandSize = Hnsw.K + 10
+    // y slightly above √3 (sim slightly below 1/2), stepped down one float
+    // ulp per id, so the raw sim rises with vec_id
+    val ys = Iterator.iterate(1.7320512f)(y => Math.nextDown(y))
+      .take(bandSize).toSeq
+    val band = ys.zipWithIndex.map { case (y, i) =>
+      Hnsw.VecRow(100L + i, Array(1f, y)) }
+    val low = (0 until 10).map(j =>
+      Hnsw.VecRow(200L + j, Array(1f, 3f + 0.1f * j)))
+    val vecs = high ++ band ++ low
+    // the fixture is what it claims: one rounded band, raw sims rising
+    val bandSims = band.map(v => naiveCos(q, v.embedding))
+    assert(bandSims.map(round6).distinct.size == 1, bandSims)
+    assert(bandSims.zip(bandSims.tail).forall { case (a, b) => a < b }, bandSims)
+    val naive = naiveTopK(q, vecs, Hnsw.K)
+    assert(naive == high.map(_.vec_id) ++ band.take(Hnsw.K - 3).map(_.vec_id))
+    val g = Hnsw.buildShard(vecs.iterator)
+    assert(g.exactTopK(q, Hnsw.K).map(_._1) == naive)
+    // per-shard pools of K, merged in the same order, give the global
+    // top-K for any sharding
+    (2 to 5).foreach { shards =>
+      val pooled = vecs.groupBy(_.vec_id % shards).values.toSeq.flatMap { vs =>
+        Hnsw.buildShard(vs.iterator).exactTopK(q, Hnsw.K) }
+      val merged = pooled.sortBy(t => (-t._2, t._1)).take(Hnsw.K).map(_._1)
+      assert(merged == naive, s"$shards shards")
     }
   }
 
@@ -50,7 +97,7 @@ class HnswSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val vecs = (0L until 800L).map(i =>
       Hnsw.VecRow(i, Array.fill(64)(rnd.nextGaussian().toFloat)))
-    val (g, _) = Hnsw.buildShard(vecs.iterator)
+    val g = Hnsw.buildShard(vecs.iterator)
     val recalls = vecs.take(40).map { q =>
       val exact = g.exactTopK(q.embedding, Hnsw.K).map(_._1).toSet
       val got = g.search(q.embedding, Hnsw.K, Hnsw.EfS).map(_._1).toSet
@@ -65,7 +112,7 @@ class HnswSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val vecs = (0L until 600L).map(i =>
       Hnsw.VecRow(i, Array.fill(64)(rnd.nextGaussian().toFloat)))
-    val (rebuilt, _) = Hnsw.buildShard(vecs.iterator)
+    val rebuilt = Hnsw.buildShard(vecs.iterator)
     val inc = new Hnsw.ShardGraph
     vecs.filter(_.vec_id % 10 != 0).foreach(v => inc.insert(v.vec_id, v.embedding))
     vecs.filter(_.vec_id % 10 == 0).foreach(v => inc.insert(v.vec_id, v.embedding))
@@ -101,7 +148,7 @@ class HnswSpec extends SparkSpec {
 
   test("index dump/load round-trip is idempotent: dump∘load∘dump = dump") {
     val vecs = randVecs(31, 500)
-    val (g, _) = Hnsw.buildShard(vecs.iterator)
+    val g = Hnsw.buildShard(vecs.iterator)
     val dumped = g.toIndexRows(3).toIndexedSeq
     val loaded = new Hnsw.ShardGraph
     loaded.loadFrom(dumped)
@@ -110,14 +157,14 @@ class HnswSpec extends SparkSpec {
 
   test("load→search ≡ build→search on the same graph state") {
     val vecs = randVecs(37, 700)
-    val (g, _) = Hnsw.buildShard(vecs.iterator)
+    val g = Hnsw.buildShard(vecs.iterator)
     val loaded = new Hnsw.ShardGraph
     loaded.loadFrom(g.toIndexRows(0).toIndexedSeq)
     vecs.take(25).foreach { q =>
       assert(loaded.search(q.embedding, Hnsw.K, Hnsw.EfS) ==
         g.search(q.embedding, Hnsw.K, Hnsw.EfS), s"search probe ${q.vec_id}")
-      assert(loaded.exactTopK(q.embedding, Hnsw.K + 6) ==
-        g.exactTopK(q.embedding, Hnsw.K + 6), s"exact probe ${q.vec_id}")
+      assert(loaded.exactTopK(q.embedding, Hnsw.K) ==
+        g.exactTopK(q.embedding, Hnsw.K), s"exact probe ${q.vec_id}")
     }
   }
 
@@ -175,7 +222,7 @@ class HnswSpec extends SparkSpec {
       val dir = s"$root/shard=$sh"
       if (empty.contains(sh)) new java.io.File(dir).mkdirs()
       else {
-        val (g, _) = Hnsw.buildShard(
+        val g = Hnsw.buildShard(
           base.filter(_.vec_id % Hnsw.IsoShards == sh).iterator)
         val df = spark.createDataset(g.toIndexRows(sh).toSeq).drop("shard")
         (if (split.contains(sh)) df.repartition(2) else df.coalesce(1))
@@ -266,11 +313,20 @@ class HnswSpec extends SparkSpec {
   }
 
   test("q172 build gate is partition-invariant and matches the level rule") {
+    import spark.implicits._
     val base = Hnsw.q172HnswBuild.plan(spark, dir)
       .orderBy("level").collect().map(_.toSeq)
-    // the same histogram from a deliberately re-partitioned source is
-    // identical (groupByKey shards by vec_id, not physical layout)
+    // the same build over a deliberately re-partitioned source gives the
+    // same rows (perShard keys by vec_id, not physical layout)
     val emb = graft.core.Tables.embeddings(spark, dir).repartition(7)
+    val vecs = emb.select("vec_id", "embedding").as[Hnsw.VecRow]
+    assert(rows(Hnsw.buildGate(spark, vecs)) ==
+      rows(Hnsw.q172HnswBuild.plan(spark, dir)))
+    // ...because the graphs themselves are identical, node for node
+    val inOrder = graft.core.Tables.embeddings(spark, dir)
+      .select("vec_id", "embedding").as[Hnsw.VecRow]
+    assert(canon(Hnsw.buildIndexRows(vecs).collect().iterator) ==
+      canon(Hnsw.buildIndexRows(inOrder).collect().iterator))
     val levels = emb.select(col("vec_id")).collect().map(r =>
       Hnsw.levelOf(r.getLong(0)))
     val expected = levels.groupBy(identity).view.mapValues(_.length).toMap
