@@ -163,8 +163,8 @@ class HnswSpec extends SparkSpec {
     vecs.take(25).foreach { q =>
       assert(loaded.search(q.embedding, Hnsw.K, Hnsw.EfS) ==
         g.search(q.embedding, Hnsw.K, Hnsw.EfS), s"search probe ${q.vec_id}")
-      assert(loaded.exactTopK(q.embedding, Hnsw.K) ==
-        g.exactTopK(q.embedding, Hnsw.K), s"exact probe ${q.vec_id}")
+      assert(loaded.exactTopK(q.embedding, Hnsw.K + 6) ==
+        g.exactTopK(q.embedding, Hnsw.K + 6), s"exact probe ${q.vec_id}")
     }
   }
 
