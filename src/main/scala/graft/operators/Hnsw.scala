@@ -992,15 +992,16 @@ object Hnsw {
     // a single task at bench scale (see perShard)
     val cellRank = cents.select(col("cent_id")).as[Long].collect()
       .sorted.zipWithIndex.toMap
-    // probe sets as dense cell keys: NQueries × RoutedProbe rows —
-    // bounded, driver-collected
-    val probeSets: Map[Long, Set[Int]] = cells
+    // the probe sets (as dense cell keys) and the probe vectors (their
+    // arn = 1 rows) in ONE driver collect: NQueries × RoutedProbe rows
+    val probeRows = cells
       .filter(col("vec_id") < NQueries && col("arn") <= RoutedProbe)
-      .select(col("vec_id"), col("cent_id"))
-      .as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (q, cs) => q -> cs.map(c => cellRank(c._2)).toSet }
-    val bp = s.sparkContext.broadcast(probeSets)
-    val bq = probeVecs(s, d)
+      .select(col("vec_id"), col("cent_id"), col("arn"), col("embedding"))
+      .as[(Long, Long, Int, Array[Float])].collect()
+    val bp = s.sparkContext.broadcast(probeRows.groupBy(_._1).map {
+      case (q, rs) => q -> rs.map(r => cellRank(r._2)).toSet })
+    val bq = s.sparkContext.broadcast(probeRows
+      .collect { case (q, _, 1, v) => VecRow(q, v) }.sortBy(_.vec_id))
     val bRank = s.sparkContext.broadcast(cellRank)
     val keyed = cells.filter(col("arn") === 1)
       .select(col("cent_id"), col("vec_id"), col("embedding"))

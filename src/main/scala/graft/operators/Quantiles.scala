@@ -1,16 +1,14 @@
 package graft.operators
 
 import graft.core.{Num, Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact distributed order statistics at an ARBITRARY probe set — the
-  * generalization of q121/q122's two-probe winsor bracket to K
-  * simultaneous cut points, applied here as equal-frequency decile
-  * binning (the feature-bucketization / histogram-equalization step of a
-  * training pipeline; the reference's only quantile surface is DuckDB's
-  * built-in `quantile_cont`, api/main.py's percentile endpoints).
+/** Exact distributed order statistics at an arbitrary probe set — the one
+  * kernel behind q121/q122's winsor bounds, q128's deciles and q156/q163's
+  * median/MAD (the reference's only quantile surface is DuckDB's built-in
+  * `quantile_cont`, api/main.py's percentile endpoints).
   *
   * Why not `ntile(10) OVER (ORDER BY v)`: a global-ORDER window funnels
   * every row through ONE task's sort buffer — the canonical
@@ -19,83 +17,168 @@ import org.apache.spark.sql.functions._
   * round-6 verdict's scale-killer, removed from this catalog). The
   * bracket technique keeps every stage partial/mergeable:
   *
-  *   1. ONE `approx_percentile` sketch pass yields a bracket
-  *      [lb_k, ub_k] around every cut k — rank error ≤ n/Acc < W·n, so
-  *      the true rank-r_k value provably lies inside bracket k.
-  *   2. ONE grouped pass buckets rows by bracket region: in-bracket
-  *      values keep their identity (one cell per value), the K+1
-  *      between-bracket regions COLLAPSE to one cell each carrying
-  *      (count, exact-decimal sum, min, max) — so the cells frame is
-  *      sketch-bounded, never O(n).
-  *   3. Cut k = the exact LOWER order statistic at rank ⌈k·n/10⌉, read
-  *      off the cells' cumulative counts (a window over the tiny cells
-  *      frame, never the raw column). Type-1 quantiles on purpose: every
-  *      cut is an actual data value — no interpolation, no float-ulp
-  *      cross-engine fragility at all.
-  *   4. The per-bin aggregate is computed FROM THE CELLS, not a third
-  *      scan: a between-bracket cell lies strictly inside
-  *      (ub_{k-1}, lb_k) ⊆ (cut_{k-1}, cut_k], so every cell maps wholly
-  *      to one bin and bin stats are exact cell-stat re-aggregations.
+  *   1. [[brackets]]: ONE `approx_percentile` sketch pass, collected, yields
+  *      a bracket [lb, ub] around every target rank — rank error ≤ n/Acc <
+  *      W·n, so the true order statistic provably lies inside its bracket.
+  *   2. [[cells]]: ONE grouped pass buckets rows by bracket region, the
+  *      brackets entering the plan as literals: in-bracket values keep
+  *      their identity (one cell per value), the between-bracket regions
+  *      COLLAPSE to one cell each carrying the caller's aggregates — so the
+  *      cells frame is sketch-bounded, never O(n).
+  *   3. [[valuesAtRanks]]: the exact value at each rank, read off the
+  *      cells' cumulative counts (a window over the tiny cells frame, never
+  *      the raw column).
+  *   4. The caller's final aggregate is computed FROM THE CELLS, not
+  *      another scan: a between-bracket cell lies wholly between two
+  *      order statistics, so it classifies as a unit.
   *
-  * Two scans total, every aggregate map-side-combinable, the only window
-  * runs over the sketch-bounded cells — the shape that survives 100 TB.
+  * One NULL rule: a NULL value gets its own bucket ([[NullBucket]]); it
+  * counts toward the row count and never enters the rank window, so a
+  * rank past the non-null values reads NULL. The rank space is the
+  * caller's: sketching `v` ranks the non-null values (`quantile_cont`),
+  * sketching [[nullsLast]]`(v)` ranks every row with NULLs last (an
+  * oracle's `row_number() OVER (ORDER BY v)` over count(*) positions).
   */
 object Quantiles {
 
   private val K = 9 // decile cuts
-  // The sketch constants every bracketed kernel uses (these deciles, the
-  // medians below, and TextCuration's winsor bounds): coverage holds when
-  // W·n − n/Acc ≥ 2 for all n ≥ SmallN.
+  // The sketch constants: coverage holds when W·n − n/Acc ≥ 2 for all
+  // n ≥ SmallN. Acc trades sketch-merge cost against bracket width: the
+  // final merge task handles O(partitions · summary) entries, and acc=1e5
+  // measured 5.5 s at sf1 vs 0.96 s for Spark's default 1e4 — so keep the
+  // default and widen the bracket instead. The bracket holds ≤ ~2·W·n
+  // ranks ≈ 0.1% of the column; for an all-distinct column at extreme n,
+  // raise Acc and shrink W by the same factor — the guarantee holds.
   private[operators] val Acc = 10000 // approx_percentile rank error <= n/Acc
   private[operators] val W = 5e-4 // bracket half-width in percentile space
   private[operators] val SmallN = 100000L // below this the whole column is the histogram
 
-  /** Step 1+2: sketch-bracketed cells for column `c` of `li`. One row per
-    * in-bracket value plus one per collapsed between-bracket region,
-    * carrying (cnt, exact-decimal vsum, vmin, vmax, n).
+  /** A bracket key: the values of the bracket key columns, empty when global. */
+  private[graft] type Key = Seq[Any]
+
+  /** The bucket of a NULL value: outside the rank window. */
+  private[graft] val NullBucket = -1
+
+  /** One key's sketch pass: the count `n` of sketched values, the probed
+    * values `pr` (empty when none), and whether `n` is below the small-n
+    * cutoff.
     */
-  private[graft] def decileCells(li: DataFrame, c: String,
-      smallN: Long = SmallN): DataFrame = {
-    val probes = (1 to K).flatMap(k => Seq(k / 10.0 - W, k / 10.0 + W))
-    val stats = li.agg(
-      count(col(c)).as("n"),
-      expr(s"approx_percentile($c, array(${probes.mkString(",")}), $Acc)").as("pr"))
-      .select(col("n") +: (1 to K).flatMap(k => Seq(
-        col("pr")(2 * (k - 1)).as(s"lb$k"),
-        col("pr")(2 * k - 1).as(s"ub$k"))): _*)
-    val v = col("v")
-    val bucket = (1 to K).foldLeft(when(col("n") < smallN, lit(1))) {
-      (e, k) =>
-        e.when(v < col(s"lb$k"), lit(2 * k - 2))
-          .when(v <= col(s"ub$k"), lit(2 * k - 1))
-    }.otherwise(lit(2 * K))
-    li.select(col(c).as("v"))
-      .crossJoin(broadcast(stats))
-      .withColumn("bucket", bucket)
-      .groupBy(col("bucket"), when(col("bucket") % 2 === 1, v).as("bv"))
-      .agg(count(lit(1)).as("cnt"),
-        Num.dsumDec(v).as("vsum"),
-        min(v).as("vmin"), max(v).as("vmax"),
-        max(col("n")).as("n"))
+  private[graft] final case class Bracket(n: Long, pr: IndexedSeq[Double],
+      small: Boolean) {
+    /** The identity bands of the first `m` probe pairs (pr(2i), pr(2i+1));
+      * none when small, where every value keeps its identity.
+      */
+    def bands(m: Int): Seq[(Double, Double)] =
+      if (small) Nil else (0 until m).map(i => (pr(2 * i), pr(2 * i + 1)))
   }
 
-  /** Step 3: the 9 exact lower order statistics (rank ⌈k·n/10⌉) as a
-    * 1-row frame (c1..c9) for broadcast, read off the cells' cumulative
-    * counts in value order (bucket order IS value order by construction
-    * of the bucket CASE chain).
+  /** `v` with NULL as +∞: sketched, it ranks every row, NULLs last. */
+  private[graft] def nullsLast(v: Column): Column =
+    coalesce(v, lit(Double.PositiveInfinity))
+
+  /** Step 1's sketch pass as a frame: per key, (keys..., n, pr). */
+  private[graft] def sketch(df: DataFrame, v: Column, keys: Seq[String],
+      probes: Seq[Double]): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(v).as("n"),
+      approx_percentile(v, array(probes.map(lit): _*), lit(Acc)).as("pr"))
+
+  /** Step 1: the [[sketch]] pass, collected per key (key cardinality is
+    * small). Collecting instead of broadcast-joining (optimization round
+    * 15) turns every later pass into a join-free map: the bracket bounds
+    * become codegen literals, and the broadcast-exchange job per scalar
+    * disappears. `smallN` is the small-n cutoff (a test seam).
     */
-  private[graft] def decileCuts(cells: DataFrame): DataFrame = {
-    val ranked = cells.withColumn("cum",
-      sum(col("cnt")).over(Window.orderBy(col("bucket"), col("bv"))))
-    val cs = (1 to K).map(k =>
-      min(when(col("cum") >= expr(s"(n * $k + 9) DIV 10"), col("bv")))
-        .as(s"c$k"))
-    ranked.agg(cs.head, cs.tail: _*)
+  private[graft] def brackets(df: DataFrame, v: Column, keys: Seq[String],
+      probes: Seq[Double], smallN: Long = SmallN): Map[Key, Bracket] = {
+    val m = keys.size
+    sketch(df, v, keys, probes).collect().map { r =>
+      val n = r.getLong(m)
+      val pr = if (r.isNullAt(m + 1)) IndexedSeq.empty[Double]
+               else r.getSeq[Double](m + 1).toIndexedSeq
+      keyOf(r, m) -> Bracket(n, pr, n < smallN)
+    }.toMap
   }
+
+  /** when-chain literal lookup over the collected keys — the literal
+    * replacement for a broadcast join on the key; `orElse` for a key not
+    * in `m`.
+    */
+  private[graft] def byKey[A](keys: Seq[String], m: Map[Key, A],
+      orElse: Column)(f: A => Column): Column =
+    if (keys.isEmpty) m.get(Nil).fold(orElse)(f)
+    else m.toSeq.sortBy(_._1.mkString("\u0001")).foldLeft(orElse) {
+      case (acc, (k, a)) =>
+        when(keys.zip(k).map { case (c, x) => col(c) <=> lit(x) }.reduce(_ && _), f(a))
+          .otherwise(acc)
+    }
+
+  /** Bucket CASE over bands in increasing value order: band i keeps the
+    * identity of its values in bucket 2i+1, the region below it collapses
+    * to bucket 2i, everything above the last band to bucket 2·bands; no
+    * bands keeps every value's identity. Bucket order is value order.
+    */
+  private def bucketOf(v: Column, bands: Seq[(Double, Double)]): Column =
+    if (bands.isEmpty) when(v.isNull, lit(NullBucket)).otherwise(lit(1))
+    else bands.zipWithIndex.foldLeft(when(v.isNull, lit(NullBucket))) {
+      case (e, ((lb, ub), i)) => e.when(v < lb, lit(2 * i)).when(v <= ub, lit(2 * i + 1))
+    }.otherwise(lit(2 * bands.size))
+
+  /** Step 2: ONE grouped pass over `df` (map-side partial aggregation, no
+    * join). Rows are bucketed by their bracket key's literal bands and
+    * grouped by (outKeys ∪ keys, bucket, bv), where `bv` is the value in an
+    * identity bucket and NULL in a collapsed one. Each cell carries `cnt`
+    * plus the caller's `aggs` over the value column `v`. The output keys
+    * are the caller's: a global bracket may feed cells keyed by the
+    * output group.
+    */
+  private[graft] def cells(df: DataFrame, v: Column, keys: Seq[String],
+      outKeys: Seq[String], br: Map[Key, Seq[(Double, Double)]],
+      aggs: Seq[Column]): DataFrame = {
+    val groupCols = (outKeys ++ keys).distinct.map(col)
+    df.select(groupCols :+ v.as("v"): _*)
+      .withColumn("bucket",
+        byKey(keys, br, lit(null).cast("int"))(bucketOf(col("v"), _)))
+      .groupBy(groupCols :+ col("bucket") :+
+        when(col("bucket") % 2 === 1, col("v")).as("bv"): _*)
+      .agg(count(lit(1)).as("cnt"), aggs: _*)
+  }
+
+  /** Step 3: the exact value at each 1-based rank (ranks(j) per key), as
+    * (keys..., v0, v1, ...): one window partitioned by the bracket keys
+    * over the cells' cumulative counts in value order, one
+    * `min(when(cum ≥ r, bv))` read per rank. A rank past the non-null
+    * values reads NULL, the oracle's answer; a key without a non-null
+    * value has no row.
+    * Cells keyed finer than the bracket are peers in the window's order,
+    * so they need no collapse first.
+    */
+  private[graft] def valuesAtRanks(cells: DataFrame, keys: Seq[String],
+      ranks: Seq[Map[Key, Long]]): DataFrame = {
+    val keyCols = keys.map(col)
+    val reads = ranks.zipWithIndex.map { case (r, j) =>
+      min(when(col("cum") >= byKey(keys, r, lit(null).cast("long"))(lit(_)), col("bv")))
+        .as(s"v$j")
+    }
+    cells.filter(col("bucket") =!= NullBucket)
+      .withColumn("cum", sum(col("cnt")).over(
+        Window.partitionBy(keyCols: _*).orderBy(col("bucket"), col("bv"))))
+      .groupBy(keyCols: _*)
+      .agg(reads.head, reads.tail: _*)
+  }
+
+  /** A (keys..., doubles...) frame collected per key. */
+  private[graft] def scalars(df: DataFrame,
+      keys: Seq[String]): Map[Key, IndexedSeq[Option[Double]]] =
+    df.collect().map { r =>
+      keyOf(r, keys.size) -> (keys.size until r.length).map(doubleAt(r, _))
+    }.toMap
+
+  private def keyOf(r: Row, m: Int): Key = (0 until m).map(r.get)
 
   /** Which bin a value (or a whole collapsed cell, via its min) falls in:
     * 1 + number of cuts strictly below it (cuts as collected literals; a
-    * NULL cut — no non-null value — counts for no value, as in the oracle).
+    * NULL cut — its rank lies among the NULLs — counts for no value, as in
+    * the oracle).
     */
   private def binOf(v: Column, cuts: Seq[Column]): Column =
     cuts.map(c => when(v > c, 1).otherwise(0)).foldLeft(lit(1))(_ + _)
@@ -104,28 +187,40 @@ object Quantiles {
     * all-null measure leaves an order statistic NULL; it re-enters the
     * plan as NULL, the oracle's answer, instead of a primitive read.
     */
-  private def litD(x: Option[Double]): Column =
+  private[graft] def litD(x: Option[Double]): Column =
     x.fold(lit(null).cast("double"))(lit(_))
 
   private def doubleAt(r: Row, i: Int): Option[Double] =
     if (r.isNullAt(i)) None else Some(r.getDouble(i))
 
+  /** Bracket probes p ± W around each decile. */
+  private[graft] val DecileProbes: Seq[Double] =
+    (1 to K).flatMap(k => Seq(k / 10.0 - W, k / 10.0 + W))
+
+  /** The 9 type-1 decile ranks ⌈k·n/10⌉ per key. */
+  private[graft] def decileRanks(br: Map[Key, Bracket]): Seq[Map[Key, Long]] =
+    (1 to K).map(k => br.view.mapValues(b => (b.n * k + 9) / 10).toMap)
+
   /** Equal-frequency decile binning of lineitem extended price: exact
-    * type-1 decile cuts, then per-bin row counts, exact-decimal sums and
-    * min/max — all re-aggregated from the cells (two scans total). The
-    * nine cuts are driver-collected (a 1-row frame either way) and enter
-    * the final re-aggregation as codegen literals — round 15, same
-    * literal-scalar treatment as q156/q163.
+    * type-1 decile cuts (every cut an actual data value — no
+    * interpolation, no float-ulp cross-engine fragility), then per-bin row
+    * counts, exact-decimal sums and min/max — all re-aggregated from the
+    * cells: a between-bracket cell lies strictly inside (ub_{k-1}, lb_k) ⊆
+    * (cut_{k-1}, cut_k], so it maps wholly to one bin. Two raw scans; the
+    * nine cuts re-enter the plan as codegen literals.
     */
   val q128QuantileBins = Q(
     "q128_quantile_bins",
     (s, d) => {
-      val cells = decileCells(Tables.lineitem(s, d), "l_extendedprice")
+      val li = Tables.lineitem(s, d)
+      val v = col("l_extendedprice")
+      val br = brackets(li, nullsLast(v), Nil, DecileProbes)
+      val cs = cells(li, v, Nil, Nil, br.view.mapValues(_.bands(K)).toMap,
+        Seq(Num.dsumDec(col("v")).as("vsum"),
+          min(col("v")).as("vmin"), max(col("v")).as("vmax")))
         .localCheckpoint(true)
-      val cutRow = decileCuts(cells).first()
-      val cuts = (0 until K).map(i => litD(doubleAt(cutRow, i)))
-      cells
-        .withColumn("bin", binOf(coalesce(col("bv"), col("vmin")), cuts))
+      val cuts = scalars(valuesAtRanks(cs, Nil, decileRanks(br)), Nil)(Nil).map(litD)
+      cs.withColumn("bin", binOf(coalesce(col("bv"), col("vmin")), cuts))
         .groupBy("bin")
         .agg(sum(col("cnt")).as("n"),
           sum(col("vsum")).cast("double").as("sum_price"),
@@ -167,24 +262,19 @@ object Quantiles {
   )
 
   /** Materialize the narrow multi-pass projection at a width every pass
-    * can use: the two percentile_approx sketch passes are serial
-    * single-sketch inserts per partition, and the bench fixtures arrive
-    * as ONE row-group (1-task scans) — so a 1-partition checkpoint makes
-    * every downstream pass single-threaded (measured: each sketch job
-    * 0.4–0.6 s at sf0.1). Widen ONCE before checkpointing, derived from
-    * input size ([[graft.core.ScaleWidth]], ~1 MB compressed per
-    * partition), and only when the scan is narrower than that target —
-    * a production scan (thousands of splits) skips the exchange
-    * entirely, so this is not a local-core-count tune.
-    */
-  /** Width-gated keyed repartition of a narrow multi-pass projection.
-    * Tried and REVERTED for the winsor pair (q121/q122, round 15): their
-    * TWO passes share one execution, so ReuseExchange did give a single
-    * shuffle both read — but shuffling the raw 600k-row projection
+    * can use: the sketch passes are serial single-sketch inserts per
+    * partition, and the bench fixtures arrive as ONE row-group (1-task
+    * scans) — so a 1-partition checkpoint makes every downstream pass
+    * single-threaded (measured: each sketch job 0.4–0.6 s at sf0.1). Widen
+    * ONCE before checkpointing, derived from input size
+    * ([[graft.core.ScaleWidth]], ~1 MB compressed per partition), and only
+    * when the scan is narrower than that target — a production scan
+    * (thousands of splits) skips the exchange entirely, so this is not a
+    * local-core-count tune. Tried and REVERTED for the winsor pair
+    * (q121/q122, round 15): shuffling their raw 600k-row projection
     * (~10 MB) cost exactly what parallelizing two ~0.35 s serial passes
     * saved (q121 1.11 → 1.17 s min, q122 1.21 → 1.20). It pays only when
-    * FOUR passes amortize one materialization (q156/q163 via
-    * [[checkpointWide]]).
+    * FOUR passes amortize one materialization (q156/q163).
     */
   private def widen(df: DataFrame, key: Column): DataFrame = {
     // capped by task slots (floor 16): the passes are narrow maps +
@@ -207,192 +297,76 @@ object Quantiles {
   private def checkpointWide(df: DataFrame): DataFrame =
     widen(df, col("l_extendedprice")).localCheckpoint(true)
 
-  private final case class Bracket(n: Long, lb: Double, ub: Double) {
-    def small: Boolean = n < SmallN
-    def target: Long = (n + 1) / 2 // type-1 lower-median rank, (n+1) DIV 2
-  }
+  private val MedianProbes = Seq(0.5 - W, 0.5 + W)
 
-  /** Per-group p50 bracket from one grouped sketch pass, collected to the
-    * driver (group cardinality is small — the SAME boundedness assumption
-    * the previous broadcast-join form made; a 1-group caller passes no
-    * keys and gets the global bracket under key ""). Collecting instead
-    * of broadcast-joining (optimization round 15, guide §1.2/§2.4) turns
-    * every later pass into a join-free map over the checkpointed
-    * projection: the bracket bounds become codegen literals, and the
-    * broadcast-exchange materialization job per scalar disappears.
-    */
-  private def brackets(df: DataFrame, v: Column,
-      keys: Seq[String]): Map[String, Bracket] = {
-    val agg = Seq(
-      count(v).as("n"),
-      percentile_approx(v, array(lit(0.5 - W), lit(0.5 + W)), lit(Acc)).as("pr"))
-    val rows =
-      (if (keys.isEmpty) df.agg(agg.head, agg.tail: _*)
-       else df.groupBy(keys.map(col): _*).agg(agg.head, agg.tail: _*))
-        .collect()
-    rows.map { r =>
-      val k = if (keys.isEmpty) "" else r.getString(0)
-      val off = if (keys.isEmpty) 0 else 1
-      // no non-null value: no sketch, and n = 0 makes the bracket small,
-      // so its bounds are never read
-      val pr = Option(r.getSeq[Double](off + 1)).getOrElse(Seq(Double.NaN, Double.NaN))
-      k -> Bracket(r.getLong(off), pr(0), pr(1))
-    }.toMap
-  }
+  /** The type-1 lower-median rank (n+1) DIV 2 per key. */
+  private def medianRank(br: Map[Key, Bracket]): Seq[Map[Key, Long]] =
+    Seq(br.view.mapValues(b => (b.n + 1) / 2).toMap)
 
-  /** when-chain literal lookup over the collected group keys — the
-    * literal replacement for a broadcast join on the group key.
-    */
-  private def byKey(keyCol: Column, m: Map[String, Option[Double]]): Column =
-    m.toSeq.sortBy(_._1).foldLeft(lit(null).cast("double")) {
-      case (acc, (k, x)) => when(keyCol === k, litD(x)).otherwise(acc)
-    }
+  private val Thr = 4.4478 // 3 · 1.4826: the 3σ-equivalent MAD multiple
 
-  /** Bucket CASE for a 1-cut literal bracket: 0 below, 1 inside (identity
-    * kept), 2 above; `5` isolates NULL values (counted in n, never in the
-    * median window or the outlier count — mirrors the join form, where a
-    * NULL never satisfied the threshold comparison); the SmallN fallback
-    * keeps every value as an identity cell.
+  /** Robust MAD outliers per bracket key (none: global), reported per
+    * `l_returnflag`. FOUR raw passes over ONE materialization of the
+    * narrow (flag, value) projection: sketch(x) and cells(x) → median;
+    * sketch(|x−med|) and the deviation cells → MAD and the outlier counts
+    * (the deviation passes cannot reuse x's cells: |x−med| folds both
+    * tails together, and collapsed cells have lost the identity that
+    * folding needs). The deviation cells carry one more band, the
+    * outlier-threshold band [Thr·dlb, Thr·dub]: mad ∈ [dlb, dub] ⇒ the
+    * exact threshold t = Thr·mad lies in it, so every collapsed cell is
+    * wholly ≤ t or wholly > t and the two identity bands compare their
+    * exact values — the final count re-aggregates the cells instead of
+    * scanning a fifth time. The threshold band stays out of the MAD rank
+    * window. Every scalar (bracket, med, mad) is driver-collected and
+    * re-enters the plan as a codegen literal.
     */
-  private def bucket1(v: Column, b: Bracket): Column =
-    if (b.small) lit(1)
-    else when(v.isNull, lit(5))
-      .when(v < b.lb, lit(0)).when(v <= b.ub, lit(1)).otherwise(lit(2))
-
-  /** Per-group exact type-1 lower medians of `v` via literal-bracket
-    * cells: ONE grouped pass over `df` (map-side partial aggregation,
-    * no join), a group-partitioned window over the sketch-bounded cells,
-    * collected to scalars. With `keys` empty the group is global ("").
-    */
-  private def medianScalars(df: DataFrame, v: Column, keys: Seq[String],
-      br: Map[String, Bracket]): Map[String, Option[Double]] = {
-    val keyCols = keys.map(col)
-    val keyOf = if (keys.isEmpty) lit("") else col(keys.head)
-    val bucket = br.toSeq.sortBy(_._1).foldLeft(lit(null).cast("int")) {
-      case (acc, (k, b)) => when(keyOf === k, bucket1(col("v"), b)).otherwise(acc)
-    }
-    val cells = df
-      .select(keyCols :+ v.as("v"): _*)
-      .withColumn("bucket", bucket)
-      .groupBy(keyCols :+ col("bucket") :+
-        when(col("bucket") === 1, col("v")).as("bv"): _*)
-      .agg(count(lit(1)).as("cnt"))
-    val w =
-      if (keys.isEmpty) Window.orderBy(col("bucket"), col("bv"))
-      else Window.partitionBy(keyCols: _*).orderBy(col("bucket"), col("bv"))
-    val target = byKey(keyOf, br.map { case (k, b) => k -> Some(b.target.toDouble) })
-    val ranked = cells.filter(col("bucket") <= 1)
-      .withColumn("cum", sum(col("cnt")).over(w))
-    val medAgg = min(when(col("cum") >= target, col("bv"))).as("m")
-    val rows =
-      (if (keys.isEmpty) ranked.agg(medAgg)
-       else ranked.groupBy(keyCols: _*).agg(medAgg)).collect()
-    rows.map { r =>
-      val k = if (keys.isEmpty) "" else r.getString(0)
-      k -> doubleAt(r, if (keys.isEmpty) 0 else 1)
-    }.toMap
-  }
-
-  /** Enriched deviation cells: grouped by the OUTPUT key and bucketed
-    * against BOTH the mad bracket [dlb, dub] and the outlier-threshold
-    * band [4.4478·dlb, 4.4478·dub] (identity kept in both), so the final
-    * per-group aggregate reads off these cells and the 5th raw pass of
-    * the previous shape (the threshold count over the fact projection)
-    * disappears (optimization round 15, guide §1.2 — one fewer full-data
-    * pass). Classification against the exact threshold t = 4.4478·mad is
-    * total: mad ∈ [dlb, dub] ⇒ t ∈ [tLo, tHi], so bucket 0/2 cells are
-    * wholly ≤ t, bucket 4 wholly > t, and the two identity bands compare
-    * their exact values. tLo/tHi are VALUE-bounded (not rank-bounded like
-    * the mad bracket): band cells are one per distinct deviation value in
-    * a width-3.4·(ub−lb) interval at the distribution's tail — they flow
-    * only through the distributed groupBy and the final sum, never the
-    * median window ([[medianScalars]] filters bucket ≤ 1), so no
-    * single-task buffer grows with them.
-    */
-  private def devCells(df: DataFrame, dv: Column, keys: Seq[String],
-      br: Map[String, Bracket]): DataFrame = {
-    val keyOf = if (keys.isEmpty) lit("") else col(keys.head)
-    def b5(b: Bracket): Column =
-      if (b.small) when(col("dv").isNull, lit(5)).otherwise(lit(1))
-      else when(col("dv").isNull, lit(5))
-        .when(col("dv") < b.lb, lit(0))
-        .when(col("dv") <= b.ub, lit(1))
-        .when(col("dv") <= 4.4478 * b.lb, lit(2))
-        .when(col("dv") <= 4.4478 * b.ub, lit(3))
-        .otherwise(lit(4))
-    val bucket = br.toSeq.sortBy(_._1).foldLeft(lit(null).cast("int")) {
-      case (acc, (k, b)) => when(keyOf === k, b5(b)).otherwise(acc)
-    }
-    // cells always carry the OUTPUT group (l_returnflag); `keys` only
-    // selects whether the bracket lookup is per-group or global
-    df.select(col("l_returnflag"), dv.as("dv"))
-      .withColumn("bucket", bucket)
-      .groupBy(col("l_returnflag"), col("bucket"),
-        when(col("bucket") === 1 || col("bucket") === 3, col("dv")).as("bv"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Outlier predicate over [[devCells]] rows for a per-group literal
-    * threshold: whole buckets where the classification is total, exact
-    * value comparison in the identity bands.
-    */
-  private def cellOutlier(thr: Column): Column =
-    col("bucket") === 4 ||
+  private def madOutliers(s: SparkSession, d: String,
+      keys: Seq[String]): DataFrame = {
+    // a multi-pass order-statistics algorithm is exactly the case where
+    // persist-once (spillable, 2 columns ≈ 12 bytes/row) beats re-decoding
+    // the pruned scan per pass — at 100 TB the projection is ~1% of the
+    // fact table's bytes and every later pass is a memory-speed map over it
+    val flag = "l_returnflag"
+    val x = col("l_extendedprice")
+    val li = checkpointWide(Tables.lineitem(s, d).select(col(flag), x))
+    def lookup(m: Map[Key, IndexedSeq[Option[Double]]]): Column =
+      byKey(keys, m, litD(None))(xs => litD(xs.head))
+    val br = brackets(li, nullsLast(x), keys, MedianProbes)
+    val med = scalars(valuesAtRanks(
+      cells(li, x, keys, keys, br.view.mapValues(_.bands(1)).toMap, Nil),
+      keys, medianRank(br)), keys)
+    val dv = abs(x - lookup(med))
+    val dbr = brackets(li, nullsLast(dv), keys, MedianProbes)
+    val dcells = cells(li, dv, keys, Seq(flag), dbr.view.mapValues { b =>
+      b.bands(1) ++ b.bands(1).map { case (lb, ub) => (Thr * lb, Thr * ub) }
+    }.toMap, Nil).localCheckpoint(true)
+    val mad = scalars(valuesAtRanks(dcells.filter(col("bucket") <= 1),
+      keys, medianRank(dbr)), keys)
+    // outliers: bucket 4 is wholly above the threshold band; the identity
+    // bands compare exactly (deviations of a 2-decimal column from its
+    // 2-decimal median are exact in IEEE, and the threshold multiplies
+    // identical doubles in both engines)
+    val thr = byKey(keys, mad, litD(None))(xs => litD(xs.head.map(_ * Thr)))
+    val outlier = col("bucket") === 4 ||
       ((col("bucket") === 1 || col("bucket") === 3) && col("bv") > thr)
+    dcells.groupBy(flag)
+      .agg(
+        sum(col("cnt")).as("n"),
+        sum(when(outlier, col("cnt")).otherwise(0L)).as("n_outliers"))
+      .select(col(flag), col("n"), col("n_outliers"),
+        lookup(med).as("med"), lookup(mad).as("mad"))
+  }
 
   /** Robust outlier detection via MEDIAN / MAD — the outlier treatment
     * that, unlike z-scores, is not itself corrupted by the outliers it
     * hunts: flag values with |x − median| > 3·1.4826·MAD (1.4826 scales
     * MAD to σ under normality). Both order statistics come from the
-    * bracket technique — never Spark's single-buffer `percentile`, never
-    * a global sort — FOUR distributed passes, all partial/mergeable:
-    * sketch(x), cells(x) → median; sketch(|x−med|), enriched
-    * cells(|x−med|) → MAD and the threshold counts (the deviation passes
-    * cannot reuse x's cells: |x−med| folds both tails together, and
-    * collapsed out-of-bracket cells have lost the identity that folding
-    * needs). Deviations of a 2-decimal column from its 2-decimal median
-    * are exact in IEEE, and the threshold comparison multiplies identical
-    * doubles in both engines — no rounding fragility anywhere.
+    * bracket kernel — never Spark's single-buffer `percentile`, never a
+    * global sort ([[madOutliers]]).
     */
   val q156MadOutliers = Q(
     "q156_mad_outliers",
-    (s, d) => {
-      // The passes run over ONE materialization of the narrow
-      // (flag, value) projection, not parquet scans per pass: a
-      // multi-pass order-statistics algorithm is exactly the case where
-      // persist-once (spillable, 2 columns ≈ 12 bytes/row) beats
-      // re-decoding the pruned scan per pass — at 100 TB the projection
-      // is ~1% of the fact table's bytes and every subsequent pass is a
-      // memory-speed map over it. FOUR raw passes since round 15
-      // (sketch x → cells x → sketch dv → enriched dv cells): the final
-      // threshold count re-aggregates [[devCells]] instead of scanning
-      // the projection a 5th time, and every scalar (bracket, med, mad)
-      // is driver-collected and re-enters the plan as a codegen literal
-      // instead of a broadcast join.
-      val x = col("l_extendedprice")
-      val li = checkpointWide(Tables.lineitem(s, d)
-        .select(col("l_returnflag"), x))
-      val br = brackets(li, x, Nil)
-      val med = medianScalars(li, x, Nil, br)("")
-      val dv = abs(x - litD(med))
-      val dbr = brackets(li, dv, Nil)
-      // the dv bracket rides the x pass's n: dv is null iff x is null
-      val cells = devCells(li, dv, Nil, dbr).localCheckpoint(true)
-      val madCells = cells.filter(col("bucket") <= 1)
-        .groupBy("bucket", "bv").agg(sum(col("cnt")).as("cnt"))
-        .withColumn("cum",
-          sum(col("cnt")).over(Window.orderBy(col("bucket"), col("bv"))))
-      val mad = doubleAt(madCells
-        .agg(min(when(col("cum") >= dbr("").target, col("bv"))))
-        .first(), 0)
-      cells.groupBy("l_returnflag")
-        .agg(
-          sum(col("cnt")).as("n"),
-          sum(when(cellOutlier(litD(mad.map(_ * 4.4478))), col("cnt")).otherwise(0L))
-            .as("n_outliers"))
-        .select(col("l_returnflag"), col("n"), col("n_outliers"),
-          litD(med).as("med"), litD(mad).as("mad"))
-    },
+    (s, d) => madOutliers(s, d, Nil),
     Some("""
       WITH nn AS (SELECT count(*) AS n FROM lineitem),
       srt AS (SELECT l_extendedprice AS v,
@@ -416,50 +390,15 @@ object Quantiles {
   /** PER-GROUP robust MAD outliers — the grouped form of [[q156MadOutliers]]
     * (the q121→q122 progression applied to the median/MAD family): each
     * group gets its OWN median, its own MAD over deviations from that
-    * median, and its own 3σ-equivalent threshold. All order statistics
-    * come from grouped sketch brackets — one grouped sketch + one grouped
-    * cells pass per statistic, group-partitioned windows over
-    * sketch-bounded histograms — so no per-group value buffer and no
-    * exact-percentile aggregate exists anywhere in the plan, at any group
-    * count. Since round 15 the per-group scalars are driver-collected
-    * when-chain literals (bounded by group cardinality, the same
-    * assumption the previous broadcast joins made) and the final
-    * threshold count re-aggregates the enriched [[devCells]] — four raw
-    * passes instead of five, zero joins.
+    * median, and its own 3σ-equivalent threshold, from grouped sketches
+    * and group-partitioned rank windows — no per-group value buffer and no
+    * exact-percentile aggregate anywhere in the plan, at any group count.
+    * The per-group scalars are when-chain literals (bounded by group
+    * cardinality).
     */
   val q163GroupMadOutliers = Q(
     "q163_group_mad_outliers",
-    (s, d) => {
-      val keys = Seq("l_returnflag")
-      val x = col("l_extendedprice")
-      // one materialized narrow projection feeds all four grouped
-      // passes — see q156's scan-sharing note
-      val li = checkpointWide(Tables.lineitem(s, d)
-        .select(col("l_returnflag"), x))
-      val br = brackets(li, x, keys)
-      val med = medianScalars(li, x, keys, br)
-      val dv = abs(x - byKey(col("l_returnflag"), med))
-      val dbr = brackets(li, dv, keys)
-      val cells = devCells(li, dv, keys, dbr).localCheckpoint(true)
-      val madRows = cells.filter(col("bucket") <= 1)
-        .withColumn("cum", sum(col("cnt")).over(
-          Window.partitionBy("l_returnflag").orderBy(col("bucket"), col("bv"))))
-        .groupBy("l_returnflag")
-        .agg(min(when(col("cum") >=
-          byKey(col("l_returnflag"), dbr.map { case (k, b) => k -> Some(b.target.toDouble) }),
-          col("bv"))).as("m"))
-        .collect()
-      val mad = madRows.map(r => r.getString(0) -> doubleAt(r, 1)).toMap
-      val thr = mad.map { case (k, m) => k -> m.map(_ * 4.4478) }
-      cells.groupBy("l_returnflag")
-        .agg(
-          sum(col("cnt")).as("n"),
-          sum(when(cellOutlier(byKey(col("l_returnflag"), thr)), col("cnt"))
-            .otherwise(0L)).as("n_outliers"))
-        .select(col("l_returnflag"), col("n"), col("n_outliers"),
-          byKey(col("l_returnflag"), med).as("med"),
-          byKey(col("l_returnflag"), mad).as("mad"))
-    },
+    (s, d) => madOutliers(s, d, Seq("l_returnflag")),
     Some("""
       WITH n AS (
         SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1),

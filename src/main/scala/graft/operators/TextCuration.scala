@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{Q, Tables}
+import graft.core.{Num, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
 object TextCuration {
 
   private val sqlNorm = Pipeline.sqlNorm
-
-  private def docsNorm(s: SparkSession, d: String): DataFrame =
-    Pipeline.normDocs(Tables.documents(s, d))
 
   /** Per-document repetition metrics (the Gopher/RefinedWeb quality
     * signals): token counts, distinct-token ratio inputs, the share of the
@@ -51,7 +48,7 @@ object TextCuration {
 
   val q101RepMetrics = Q(
     "q101_rep_metrics",
-    (s, d) => repetitionMetrics(docsNorm(s, d)),
+    (s, d) => repetitionMetrics(Pipeline.docsNorm(s, d)),
     Some(s"""
       WITH norm AS (SELECT doc_id, ${sqlNorm("text")} AS norm FROM documents),
       w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS w FROM norm),
@@ -173,7 +170,7 @@ object TextCuration {
 
   val q104TfidfTerms = Q(
     "q104_tfidf_terms",
-    (s, d) => tfidfTerms(docsNorm(s, d), 3),
+    (s, d) => tfidfTerms(Pipeline.docsNorm(s, d), 3),
     Some(s"""
       WITH norm AS (SELECT doc_id, ${sqlNorm("text")} AS norm FROM documents),
       w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS term FROM norm),
@@ -237,7 +234,7 @@ object TextCuration {
 
   val q111HeavyHitters = Q(
     "q111_heavy_hitters",
-    (s, d) => heavyHitters(docsNorm(s, d), 20),
+    (s, d) => heavyHitters(Pipeline.docsNorm(s, d), 20),
     Some(s"""
       WITH norm AS (SELECT doc_id, ${sqlNorm("text")} AS norm FROM documents),
       w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS term FROM norm),
@@ -260,182 +257,47 @@ object TextCuration {
     """),
   )
 
-  /** Exact interpolated percentile bounds (quantile_cont semantics:
-    * position `p*(n-1)` over the sorted column, linear interpolation)
-    * computed WITHOUT the single-buffer exact `percentile` aggregate.
-    * Spark's `percentile` is a TypedImperativeAggregate that merges a
-    * value→count map of the whole column into ONE final task — an
-    * O(distinct-values) single-point buffer that was the suite's one
-    * scale-killer. This form is TWO distributed scans, every aggregate
-    * partial/mergeable:
-    *
-    *   1. `count` + a mergeable `approx_percentile` sketch probed just
-    *      below/above each target percentile → a value BRACKET whose rank
-    *      coverage is guaranteed by the sketch's rank-error bound
-    *      (error ≤ n/accuracy; probes at p ± w with w·n − n/acc ≥ 2 for
-    *      all n ≥ `SmallN`, and below `SmallN` the bracket widens to the
-    *      whole column, where the histogram is trivially small anyway).
-    *   2. A bucketed value histogram: rows below/between/above the
-    *      brackets collapse to one partial-aggregated counter each; only
-    *      in-bracket values keep their identity. The histogram is ≤
-    *      ~2·w·n ranks' worth of distinct values, so the single-partition
-    *      cumulative-sum window over it is sketch-bounded, not O(n).
-    *   3. The exact order statistics at ranks ⌊p(n−1)⌋ and ⌊p(n−1)⌋+1 are
-    *      read off the cumulative counts, and the interpolation runs in
-    *      exact DECIMAL arithmetic: the column carries 2 decimals and p
-    *      has 2 decimals, so `A + d·(B−A)` is exact rational math — the
-    *      oracle computes the identical decimals, making the bound
-    *      bit-identical across engines (no float-ulp fragility at values
-    *      that coincide with a bound).
-    *
-    * Returns a 1-row (lo, hi) frame for broadcast.
+  /** p01/p99 bracket probes (p ± W, two bands), then q122's direct sketch
+    * estimates at p itself — the same sketch, built once.
     */
-  /** Step 2's bucketed cells, optionally keyed by extra grouping columns
-    * (so a downstream aggregate can reuse the SAME scan): one row per
-    * (extra keys ×) bucket × in-bracket value, carrying the cell count,
-    * the cell's exact-decimal value sum, and the column count n.
-    */
-  private[graft] def winsorCells(
-      li: DataFrame, c: String, extra: Seq[String]): DataFrame = {
-    // Acc trades sketch-merge cost against bracket width: the final merge
-    // task handles O(partitions · summary) entries, and acc=1e5 measured
-    // 5.5 s at sf1 vs 0.96 s for Spark's default 1e4 — so keep the default
-    // and widen the bracket instead. Coverage: w·n − n/Acc ≥ 2 for all
-    // n ≥ SmallN (margin ≥ 40 ranks at the cutoff); the bracket histogram
-    // is ≤ ~2·w·n ranks ≈ 0.1% of the column, whose distinct 2-decimal
-    // values stay window-safe. For an all-distinct column at extreme n,
-    // raise Acc and shrink W by the same factor — the guarantee holds.
-    import Quantiles.{Acc, SmallN, W}
-    val probes = Seq(0.01 - W, 0.01 + W, 0.99 - W, 0.99 + W)
-    val stats = li.agg(
-      count(col(c)).as("n"),
-      expr(s"approx_percentile($c, array(${probes.mkString(",")}), $Acc)").as("pr"))
-      .select(col("n"), col("pr")(0).as("lo_lb"), col("pr")(1).as("lo_ub"),
-        col("pr")(2).as("hi_lb"), col("pr")(3).as("hi_ub"))
-    val v = col("v")
-    li.select((extra.map(col) :+ col(c).as("v")): _*)
-      .crossJoin(broadcast(stats))
-      .withColumn("bucket",
-        when(col("n") < SmallN, lit(1))
-          .when(v < col("lo_lb"), lit(0))
-          .when(v <= col("lo_ub"), lit(1))
-          .when(v < col("hi_lb"), lit(2))
-          .when(v <= col("hi_ub"), lit(3))
-          .otherwise(lit(4)))
-      .groupBy((extra.map(col) :+ col("bucket") :+
-        when(col("bucket") === 1 || col("bucket") === 3, v).as("bv")): _*)
-      .agg(count(lit(1)).as("cnt"),
-        graft.core.Num.dsumDec(v).as("vsum"),
-        max(col("n")).as("n"))
+  private[graft] val WinsorProbes: Seq[Double] = {
+    import Quantiles.W
+    Seq(0.01 - W, 0.01 + W, 0.99 - W, 0.99 + W, 0.01, 0.99)
   }
 
-  /** Step 3: exact bounds read off the cumulative cell counts. Accepts
-    * cells from [[winsorCells]] with any extra keys (they are collapsed
-    * first). Returns the 1-row (lo, hi) frame for broadcast.
+  /** Exact interpolated p01/p99 bounds per bracket key (quantile_cont
+    * semantics: position `p*(n-1)` over the `n` sketched values, linear
+    * interpolation) as (keys..., lo, hi), computed WITHOUT the
+    * single-buffer exact `percentile` aggregate — Spark's `percentile`
+    * merges a value→count map of the whole column into ONE final task, the
+    * suite's one scale-killer. `cells` come from [[Quantiles.cells]] over
+    * the two [[WinsorProbes]] bands of `br`. The order statistics at ranks
+    * ⌊p(n−1)⌋+1 and +2 come off [[Quantiles.valuesAtRanks]], and the
+    * interpolation runs in exact DECIMAL arithmetic: the column carries 2
+    * decimals and p has 2 decimals, so `A + d·(B−A)` is exact rational
+    * math — the oracle computes the identical decimals, making the bound
+    * bit-identical across engines (no float-ulp fragility at values that
+    * coincide with a bound).
     */
-  private[graft] def boundsFromCells(cells: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val collapsed = cells.groupBy(col("bucket"), col("bv"))
-      .agg(sum(col("cnt")).as("cnt"), max(col("n")).as("n"))
-    // cumulative count ordered by value (bucket order IS value order; the
-    // window input is the sketch-bounded histogram, never the raw column)
-    val ranked = collapsed.withColumn("cum",
-      sum(col("cnt")).over(Window.orderBy(col("bucket"), col("bv"))))
-    val money = graft.core.Num.Money
-    def pos(p: String) =
-      (col("n") - 1).cast(org.apache.spark.sql.types.DecimalType(20, 0)) *
-        lit(new java.math.BigDecimal(p))
-    def k(p: String) = floor(pos(p)).cast("long")
-    def frac(p: String) =
-      (pos(p) - floor(pos(p))).cast(org.apache.spark.sql.types.DecimalType(4, 2))
-    def vAt(r: Column) = min(when(col("cum") >= r, col("bv")))
-    def interp(a: String, b: String, d: String) =
-      (col(a) + col(d) * (coalesce(col(b), col(a)) - col(a))).cast("double")
-    ranked.agg(
-      vAt(k("0.01") + 1).cast(money).as("loA"),
-      vAt(k("0.01") + 2).cast(money).as("loB"),
-      vAt(k("0.99") + 1).cast(money).as("hiA"),
-      vAt(k("0.99") + 2).cast(money).as("hiB"),
-      max(frac("0.01")).as("dLo"),
-      max(frac("0.99")).as("dHi"))
-      .select(interp("loA", "loB", "dLo").as("lo"),
-        interp("hiA", "hiB", "dHi").as("hi"))
-  }
-
-  private[graft] def winsorBounds(li: DataFrame, c: String): DataFrame =
-    boundsFromCells(winsorCells(li, c, Nil))
-
-  /** PER-GROUP variant of the bracket technique — exact per-key p01/p99
-    * without a per-group value buffer: one grouped sketch pass yields each
-    * group's own bracket (probes at p ± W) PLUS the contract's direct
-    * sketch estimates (p itself rides in the same probe array, so the
-    * sketch is built once); a broadcast join keys every row to ITS group's
-    * bracket; cells group by (keys, bucket, value-in-bracket). Groups
-    * below `SmallN` take the full-histogram path on their own rows (their
-    * per-group n drives the CASE), so the coverage guarantee
-    * w·n_g − n_g/Acc ≥ 2 holds for every group. Cells carry (cnt, vsum,
-    * n, alo, ahi) per group.
-    */
-  private[graft] def groupWinsorCells(
-      li: DataFrame, c: String, keys: Seq[String]): DataFrame = {
-    import Quantiles.{Acc, SmallN, W}
-    val probes = Seq(0.01 - W, 0.01, 0.01 + W, 0.99 - W, 0.99, 0.99 + W)
-    val stats = li.groupBy(keys.map(col): _*).agg(
-      count(col(c)).as("n"),
-      expr(s"approx_percentile($c, array(${probes.mkString(",")}), $Acc)").as("pr"))
-      .select((keys.map(col) :+ col("n") :+
-        col("pr")(0).as("lo_lb") :+ col("pr")(1).as("alo") :+
-        col("pr")(2).as("lo_ub") :+ col("pr")(3).as("hi_lb") :+
-        col("pr")(4).as("ahi") :+ col("pr")(5).as("hi_ub")): _*)
-    val v = col("v")
-    li.select((keys.map(col) :+ col(c).as("v")): _*)
-      .join(broadcast(stats), keys) // group cardinality is small: broadcast
-      .withColumn("bucket",
-        when(col("n") < SmallN, lit(1))
-          .when(v < col("lo_lb"), lit(0))
-          .when(v <= col("lo_ub"), lit(1))
-          .when(v < col("hi_lb"), lit(2))
-          .when(v <= col("hi_ub"), lit(3))
-          .otherwise(lit(4)))
-      .groupBy((keys.map(col) :+ col("bucket") :+
-        when(col("bucket") === 1 || col("bucket") === 3, v).as("bv")): _*)
-      .agg(count(lit(1)).as("cnt"),
-        graft.core.Num.dsumDec(v).as("vsum"),
-        max(col("n")).as("n"),
-        max(col("alo")).as("alo"), max(col("ahi")).as("ahi"))
-  }
-
-  /** Per-group exact bounds off the grouped cells: the cumulative-count
-    * window partitions BY GROUP (parallel across keys, sketch-bounded
-    * within each), then the same exact-decimal interpolation per group.
-    * Returns (keys..., lo, hi).
-    */
-  private[graft] def groupBoundsFromCells(
-      cells: DataFrame, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ranked = cells.withColumn("cum",
-      sum(col("cnt")).over(Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("bucket"), col("bv"))))
-    val money = graft.core.Num.Money
-    def pos(p: String) =
-      (col("n") - 1).cast(org.apache.spark.sql.types.DecimalType(20, 0)) *
-        lit(new java.math.BigDecimal(p))
-    def k(p: String) = floor(pos(p)).cast("long")
-    def frac(p: String) =
-      (pos(p) - floor(pos(p))).cast(org.apache.spark.sql.types.DecimalType(4, 2))
-    def vAt(r: Column) = min(when(col("cum") >= r, col("bv")))
-    def interp(a: String, b: String, d: String) =
-      (col(a) + col(d) * (coalesce(col(b), col(a)) - col(a))).cast("double")
-    ranked.groupBy(keys.map(col): _*)
-      .agg(
-        vAt(k("0.01") + 1).cast(money).as("loA"),
-        vAt(k("0.01") + 2).cast(money).as("loB"),
-        vAt(k("0.99") + 1).cast(money).as("hiA"),
-        vAt(k("0.99") + 2).cast(money).as("hiB"),
-        max(frac("0.01")).as("dLo"),
-        max(frac("0.99")).as("dHi"))
-      .select((keys.map(col) :+ interp("loA", "loB", "dLo").as("lo") :+
-        interp("hiA", "hiB", "dHi").as("hi")): _*)
+  private[graft] def winsorBounds(cells: DataFrame, keys: Seq[String],
+      br: Map[Quantiles.Key, Quantiles.Bracket]): DataFrame = {
+    import java.math.RoundingMode.FLOOR
+    import org.apache.spark.sql.types.DecimalType
+    def pos(b: Quantiles.Bracket, p: String) =
+      new java.math.BigDecimal(b.n - 1).multiply(new java.math.BigDecimal(p))
+    def k(b: Quantiles.Bracket, p: String) = pos(b, p).setScale(0, FLOOR)
+    val ranks = Seq("0.01", "0.99").flatMap(p => Seq(1, 2).map(j =>
+      br.view.mapValues(b => k(b, p).longValue + j).toMap))
+    val dec = DecimalType(4, 2)
+    def frac(p: String) = Quantiles.byKey(keys, br, lit(null).cast(dec)) { b =>
+      lit(pos(b, p).subtract(k(b, p))).cast(dec)
+    }
+    def interp(j: Int, p: String) = {
+      val (a, b) = (col(s"v$j").cast(Num.Money), col(s"v${j + 1}").cast(Num.Money))
+      (a + frac(p) * (coalesce(b, a) - a)).cast("double")
+    }
+    Quantiles.valuesAtRanks(cells, keys, ranks)
+      .select(keys.map(col) :+ interp(0, "0.01").as("lo") :+ interp(2, "0.99").as("hi"): _*)
   }
 
   /** The matching oracle bound computation: explicit order statistics +
@@ -468,38 +330,40 @@ object TextCuration {
 
   /** Winsorization — percentile clipping, the standard outlier treatment
     * before training-data statistics: values below p01 / above p99 clamp
-    * to the bound. TWO scans total, matching the oracle's count: scan 1
-    * is [[winsorCells]]' sketch pass, scan 2 builds the bucketed cells
-    * KEYED BY the output group — the same cells then serve both the exact
-    * bound derivation ([[boundsFromCells]], tiny) and the final clipped
-    * aggregate, which is computed from the CELLS, not a third raw pass:
-    * a cell is entirely below lo (bucket 0, or an in-bracket value < lo
-    * — bounds never leave their bracket, so cell-level classification is
-    * exact), entirely above hi, or entirely unclipped, and its
-    * contribution is cnt·cast(bound) or the cell's exact-decimal value
-    * sum — identical arithmetic to the per-row clip-then-cast, so the
-    * hash is unchanged. The cells are localCheckpointed (they are
-    * sketch-bounded-tiny) so the two consumers never rescan the fact
-    * table. For row-level clip application, broadcast
-    * [[winsorBounds]] and `least/greatest` map-side.
+    * to the bound. TWO raw scans, matching the oracle's count: the global
+    * sketch pass, then the bucketed cells KEYED BY the output group. The
+    * same cells serve both the exact bounds ([[winsorBounds]], collected
+    * to literals) and the final clipped aggregate, computed from the
+    * CELLS, not a third raw pass: a cell is entirely below lo (bucket 0,
+    * or an in-bracket value < lo — bounds never leave their bracket, so
+    * cell-level classification is exact), entirely above hi, or entirely
+    * unclipped, and its contribution is cnt·cast(bound) or the cell's
+    * exact-decimal value sum — identical arithmetic to the per-row
+    * clip-then-cast, so the hash is unchanged.
+    *
+    * NULLs as in the oracle: its bounds rank NULLs last inside count(*)
+    * positions (so the sketch is over [[Quantiles.nullsLast]]), and its
+    * least/greatest skip NULL — a NULL bound clips nothing, and a NULL
+    * value becomes lo.
     */
   val q121Winsorize = Q(
     "q121_winsorize",
     (s, d) => {
-      val li = graft.core.Tables.lineitem(s, d)
-      val cells = winsorCells(li, "l_extendedprice", Seq("l_returnflag"))
+      val li = Tables.lineitem(s, d)
+      val v = col("l_extendedprice")
+      val br = Quantiles.brackets(li, Quantiles.nullsLast(v), Nil, WinsorProbes)
+      val cells = Quantiles.cells(li, v, Nil, Seq("l_returnflag"),
+        br.view.mapValues(_.bands(2)).toMap, Seq(Num.dsumDec(col("v")).as("vsum")))
         .localCheckpoint()
-      val bounds = boundsFromCells(cells)
-      val money = graft.core.Num.Money
-      val belowLo = col("bucket") === 0 ||
-        (col("bv").isNotNull && col("bv") < col("lo"))
-      val aboveHi = col("bucket") === 4 ||
-        (col("bv").isNotNull && col("bv") > col("hi"))
-      val contrib = when(belowLo, col("cnt") * col("lo").cast(money))
-        .when(aboveHi, col("cnt") * col("hi").cast(money))
-        .otherwise(col("vsum"))
-      cells.crossJoin(broadcast(bounds))
-        .groupBy("l_returnflag")
+      val Seq(lo, hi) = Quantiles.scalars(winsorBounds(cells, Nil, br), Nil)(Nil)
+      def clipped(b: Option[Double]) = col("cnt") * Quantiles.litD(b).cast(Num.Money)
+      val belowLo = lo.fold(lit(false))(b => col("bucket") === 0 || col("bv") < b)
+      val aboveHi = hi.fold(lit(false))(b => col("bucket") === 4 || col("bv") > b)
+      val contrib =
+        when(col("bucket") === Quantiles.NullBucket || belowLo, clipped(lo))
+          .when(aboveHi, clipped(hi))
+          .otherwise(col("vsum"))
+      cells.groupBy("l_returnflag")
         .agg(
           sum(col("cnt")).as("n"),
           sum(when(belowLo || aboveHi, col("cnt")).otherwise(lit(0L)))
@@ -511,7 +375,7 @@ object TextCuration {
       SELECT l_returnflag, count(*) AS n,
              CAST(sum(CASE WHEN l_extendedprice < lo OR l_extendedprice > hi
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped,
-             ${graft.core.Num.sqlDsum("least(greatest(l_extendedprice, lo), hi)")} AS clipped_sum
+             ${Num.sqlDsum("least(greatest(l_extendedprice, lo), hi)")} AS clipped_sum
       FROM lineitem CROSS JOIN b
       GROUP BY l_returnflag
     """),
@@ -528,34 +392,35 @@ object TextCuration {
     * at the sparse p01 tail of a ~2k-row group adjacent ranks sit up to
     * ~6% apart (measured), hence 10% for the low bound; the dense p99
     * shoulder stays within 0.5%. Both tighten with n (≤0.1% at sf0.1).
-    * The exact anchor comes from [[groupWinsorCells]]/
-    * [[groupBoundsFromCells]] — the bracket technique applied PER GROUP
-    * (grouped sketch probes, per-group brackets, group-partitioned
-    * windows), so NO `percentile` and no per-group value buffer exists
-    * anywhere in the plan; the contract's direct sketch estimates ride
-    * in the same probe array, so the sketch is built once.
+    * The exact anchor is [[winsorBounds]] over per-group brackets and a
+    * group-partitioned rank window, so NO `percentile` and no per-group
+    * value buffer exists anywhere in the plan; the contract's direct
+    * sketch estimates ride in the same probe array. A group without a
+    * non-null value has NULL bounds and, as in the oracle, TRUE flags.
     */
   val q122GroupWinsorBounds = Q(
     "q122_group_winsor_bounds",
     (s, d) => {
       val keys = Seq("l_returnflag")
-      val cells = groupWinsorCells(
-        graft.core.Tables.lineitem(s, d), "l_extendedprice", keys)
-        .localCheckpoint()
-      val bounds = groupBoundsFromCells(cells, keys)
-      val contract = cells.groupBy("l_returnflag")
-        .agg(max(col("n")).as("n"), max(col("alo")).as("alo"),
-          max(col("ahi")).as("ahi"))
-      bounds.join(contract, "l_returnflag")
+      val li = Tables.lineitem(s, d)
+      val v = col("l_extendedprice")
+      val br = Quantiles.brackets(li, v, keys, WinsorProbes)
+      val cells = Quantiles.cells(li, v, keys, keys,
+        br.view.mapValues(_.bands(2)).toMap, Nil).localCheckpoint()
+      val bounds = Quantiles.scalars(winsorBounds(cells, keys, br), keys)
+      def exact(i: Int) = round(
+        Quantiles.byKey(keys, bounds, Quantiles.litD(None))(xs => Quantiles.litD(xs(i))), 6)
+      def est(i: Int) =
+        Quantiles.byKey(keys, br, Quantiles.litD(None))(b => Quantiles.litD(b.pr.lift(i)))
+      def within(e: Column, a: Column, tol: Double) =
+        e.isNull || abs(a - e) / e <= tol
+      cells.groupBy("l_returnflag")
+        .agg(sum(col("cnt")).as("n"))
         .select(col("l_returnflag"), col("n"),
-          round(col("lo"), 6).as("exact_lo"),
-          round(col("hi"), 6).as("exact_hi"),
-          col("alo"), col("ahi"))
+          exact(0).as("exact_lo"), exact(1).as("exact_hi"), est(4).as("alo"), est(5).as("ahi"))
         .select(col("l_returnflag"), col("n"), col("exact_lo"), col("exact_hi"),
-          (abs(col("alo") - col("exact_lo")) / col("exact_lo") <= 0.10)
-            .as("lo_within_10pct"),
-          (abs(col("ahi") - col("exact_hi")) / col("exact_hi") <= 0.005)
-            .as("hi_within_half_pct"))
+          within(col("exact_lo"), col("alo"), 0.10).as("lo_within_10pct"),
+          within(col("exact_hi"), col("ahi"), 0.005).as("hi_within_half_pct"))
     },
     Some("""
       SELECT l_returnflag, count(*) AS n,
@@ -567,17 +432,6 @@ object TextCuration {
     """),
   )
 
-  /** Per-source token-distribution divergence — KL(source ‖ corpus), the
-    * domain-shift / mixture-drift signal a training-data pipeline computes
-    * when rebalancing source mixes (complements q93's token SHARES with a
-    * distributional distance). KL needs no smoothing here because every
-    * source term is by construction in the corpus support. Plan shape: one
-    * map-side tokenize, one shuffle on (source, word); the corpus
-    * distribution is a REAGGREGATION of the per-source counts (never a
-    * second scan), totals are broadcast 1-row/5-row frames, and each KL
-    * term is p·ln(p/q) computed from exact integer ratios so both engines
-    * feed libm the identical double (only the final sum is rounded).
-    */
   /** KL(source ‖ corpus) over a (source, text) frame — see [[q127TokenDivergence]]. */
   private[graft] def tokenDivergence(docs: DataFrame): DataFrame = {
     val tok = docs
@@ -600,6 +454,17 @@ object TextCuration {
           log((col("c") * col("tt")) / (col("t") * col("cw")))), 6).as("kl"))
   }
 
+  /** Per-source token-distribution divergence — KL(source ‖ corpus), the
+    * domain-shift / mixture-drift signal a training-data pipeline computes
+    * when rebalancing source mixes (complements q93's token SHARES with a
+    * distributional distance). KL needs no smoothing here because every
+    * source term is by construction in the corpus support. Plan shape: one
+    * map-side tokenize, one shuffle on (source, word); the corpus
+    * distribution is a REAGGREGATION of the per-source counts (never a
+    * second scan), totals are broadcast 1-row/5-row frames, and each KL
+    * term is p·ln(p/q) computed from exact integer ratios so both engines
+    * feed libm the identical double (only the final sum is rounded).
+    */
   val q127TokenDivergence = Q(
     "q127_token_divergence",
     (s, d) => tokenDivergence(Tables.documents(s, d)),
@@ -845,7 +710,7 @@ object TextCuration {
 
   val q136QualityGate = Q(
     "q136_quality_gate",
-    (s, d) => qualityGate(docsNorm(s, d)),
+    (s, d) => qualityGate(Pipeline.docsNorm(s, d)),
     Some(s"""
       WITH norm AS (SELECT doc_id, ${sqlNorm("text")} AS norm FROM documents),
       t AS (${sqlGateFeatures("norm")}),
@@ -1111,7 +976,7 @@ object TextCuration {
 
   val q149Bm25 = Q(
     "q149_bm25",
-    (s, d) => bm25(docsNorm(s, d), termsFrame(s, Bm25Terms), 20),
+    (s, d) => bm25(Pipeline.docsNorm(s, d), termsFrame(s, Bm25Terms), 20),
     Some(sqlBm25(Bm25Terms, 20)),
   )
 
@@ -1122,7 +987,7 @@ object TextCuration {
 
   val q175Bm25Params = Q(
     "q175_bm25_params",
-    (s, d) => bm25(docsNorm(s, d), termsFrame(s, Bm25AltTerms), 20),
+    (s, d) => bm25(Pipeline.docsNorm(s, d), termsFrame(s, Bm25AltTerms), 20),
     Some(sqlBm25(Bm25AltTerms, 20)),
   )
 
@@ -1161,7 +1026,7 @@ object TextCuration {
 
   val q161PhraseSearch = Q(
     "q161_phrase_search",
-    (s, d) => phraseSearch(docsNorm(s, d), PhraseTerms, 10),
+    (s, d) => phraseSearch(Pipeline.docsNorm(s, d), PhraseTerms, 10),
     Some(s"""
       WITH norm AS (SELECT doc_id, ${sqlNorm("text")} AS norm FROM documents),
       words AS (SELECT doc_id, string_split(norm, ' ') AS ws FROM norm),

@@ -287,36 +287,46 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q121 winsorization never plans an exact Percentile aggregate") {
-    // the full query: its cells are localCheckpointed, so assert the cell
-    // pipeline's own plan (where the sketch lives) AND the final plan
+    // the full query: its sketch pass is a collected frame and its cells
+    // are localCheckpointed, so assert the sketch's own plan (where the
+    // sketch lives), the cell pipeline's plan AND the final plan
+    import graft.operators.{Quantiles, TextCuration}
     val li = graft.core.Tables.lineitem(spark, dir)
-    val cellsPlan = executedPlan(
-      graft.operators.TextCuration.winsorCells(li, "l_extendedprice",
-        Seq("l_returnflag")))
+    val v = Quantiles.nullsLast(col("l_extendedprice"))
+    val sketchPlan = executedPlan(Quantiles.sketch(li, v, Nil, TextCuration.WinsorProbes))
     // the only percentile anywhere is the mergeable sketch; the exact
     // single-buffer `percentile` (O(distinct) map merged into ONE task)
     // must never consume the scan
+    assert(!sketchPlan.replace("approx_percentile", "").contains("percentile("),
+      s"exact percentile aggregate found:\n${sketchPlan.take(1200)}")
+    assert(sketchPlan.contains("approx_percentile"), sketchPlan.take(600))
+    val br = Quantiles.brackets(li, v, Nil, TextCuration.WinsorProbes)
+    val cellsPlan = executedPlan(Quantiles.cells(li, col("l_extendedprice"), Nil,
+      Seq("l_returnflag"), br.view.mapValues(_.bands(2)).toMap, Nil))
     assert(!cellsPlan.replace("approx_percentile", "").contains("percentile("),
       s"exact percentile aggregate found:\n${cellsPlan.take(1200)}")
-    assert(cellsPlan.contains("approx_percentile"), cellsPlan.take(600))
-    val full = executedPlan(
-      graft.operators.TextCuration.q121Winsorize.plan(spark, dir))
+    val full = executedPlan(TextCuration.q121Winsorize.plan(spark, dir))
     assert(!full.replace("approx_percentile", "").contains("percentile("),
       s"exact percentile aggregate found:\n${full.take(1200)}")
   }
 
   test("q122 per-group bounds plan: grouped sketch, no exact Percentile, grouped window") {
+    import graft.operators.{Quantiles, TextCuration}
     val li = graft.core.Tables.lineitem(spark, dir)
-    val cellsDf = graft.operators.TextCuration.groupWinsorCells(
-      li, "l_extendedprice", Seq("l_returnflag"))
+    val v = col("l_extendedprice")
+    val keys = Seq("l_returnflag")
+    val sketchPlan = executedPlan(Quantiles.sketch(li, v, keys, TextCuration.WinsorProbes))
+    assert(sketchPlan.contains("approx_percentile"), sketchPlan.take(600))
+    assert(!sketchPlan.replace("approx_percentile", "").contains("percentile("),
+      s"exact percentile aggregate found:\n${sketchPlan.take(1200)}")
+    val br = Quantiles.brackets(li, v, keys, TextCuration.WinsorProbes)
+    val cellsDf = Quantiles.cells(li, v, keys, keys, br.view.mapValues(_.bands(2)).toMap, Nil)
     val cellsPlan = executedPlan(cellsDf)
-    assert(cellsPlan.contains("approx_percentile"), cellsPlan.take(600))
     assert(!cellsPlan.replace("approx_percentile", "").contains("percentile("),
       s"exact percentile aggregate found:\n${cellsPlan.take(1200)}")
     // the bounds window partitions BY GROUP — parallel across keys, never
     // a single global ordering
-    val bounds = graft.operators.TextCuration.groupBoundsFromCells(
-      cellsDf, Seq("l_returnflag"))
+    val bounds = TextCuration.winsorBounds(cellsDf, keys, br)
     val bPlan = executedPlan(bounds)
     assert(bPlan.contains("Window"), bPlan.take(800))
     assert(bPlan.linesIterator.exists(l =>

@@ -108,10 +108,18 @@ class TextCurationSpec extends SparkSpec {
       val b = BigDecimal(sorted(math.min(k + 1, sorted.length - 1)))
       (a + d * (b - a)).toDouble
     }
+    // the kernel: one sketch, the cells over its two bands, one rank window
+    def bounds(df: org.apache.spark.sql.DataFrame) = {
+      import graft.operators.Quantiles
+      val br = Quantiles.brackets(df, col("v"), Nil, TextCuration.WinsorProbes)
+      val cells = Quantiles.cells(df, col("v"), Nil, Nil,
+        br.view.mapValues(_.bands(2)).toMap, Nil)
+      TextCuration.winsorBounds(cells, Nil, br).collect().head
+    }
     // small-N path (full histogram) and bracket path (n >= 100k cutoff)
     for (n <- Seq(5000, 150000)) {
       val df = fixture(n)
-      val got = TextCuration.winsorBounds(df, "v").collect().head
+      val got = bounds(df)
       val sorted = df.orderBy("v").collect().map(_.getDouble(0))
       assert(got.getDouble(0) === exact(sorted, "0.01"), s"lo at n=$n")
       assert(got.getDouble(1) === exact(sorted, "0.99"), s"hi at n=$n")
@@ -122,8 +130,8 @@ class TextCurationSpec extends SparkSpec {
     }
     // partition-invariant: same bounds under a different layout
     val df = fixture(150000)
-    val a = TextCuration.winsorBounds(df, "v").collect().head
-    val b = TextCuration.winsorBounds(df.repartition(17), "v").collect().head
+    val a = bounds(df)
+    val b = bounds(df.repartition(17))
     assert((a.getDouble(0), a.getDouble(1)) === (b.getDouble(0), b.getDouble(1)))
   }
 
